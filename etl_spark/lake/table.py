@@ -43,10 +43,16 @@ import uuid
 from pathlib import Path
 from typing import Any
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from etl_spark.lake import buckethash
 
 MANIFEST_DIR = "_meta"
 DATA_DIR = "data"
@@ -195,6 +201,42 @@ def _keys_hit_file(keys: list[tuple], key_stats: dict | None,
         if hit:
             return True
     return False
+
+
+def _plan_bytes(df: DataFrame) -> int:
+    """The optimizer's size estimate of ``df`` in bytes, without a job:
+    the files' bytes for a parquet scan (the mirror's change feed), and
+    Spark's large default where it cannot tell (an RDD of Python rows) —
+    which keeps the wide staging exchange."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def _read_key_rows(path: str, key: dict, target: pa.Schema) -> pa.Table:
+    """Rows of one parquet file whose key columns equal ``key`` (null-safe),
+    in ``target``'s column order and types: a column the file predates
+    reads as nulls and a narrower type widens. Each key value is cast to
+    the column's type IN THE FILE, so the filter compares like with like
+    (Spark's INT96 timestamps read as naive nanoseconds) and row-group
+    stats prune."""
+    data = ds.dataset(path, format="parquet")
+    cond = None
+    for c, v in key.items():
+        if v is None:
+            eq = pc.field(c).is_null()
+        else:
+            eq = pc.field(c) == pa.scalar(v, target.field(c).type).cast(
+                data.schema.field(c).type
+            )
+        cond = eq if cond is None else cond & eq
+    tbl = data.to_table(filter=cond)
+    return pa.Table.from_arrays(
+        [
+            tbl.column(f.name).cast(f.type) if f.name in tbl.column_names
+            else pa.nulls(tbl.num_rows, f.type)
+            for f in target
+        ],
+        schema=target,
+    )
 
 
 def _stats_intersect(a: dict | None, b: dict | None) -> bool:
@@ -505,13 +547,6 @@ class SnapshotTable:
         # staged-footer stats go executor-side past this many files per
         # commit (see _stage_bucketed); below it a driver thread pool wins
         self.stats_distributed_files = 16384
-        # point-lookup bucket memo: key -> bucket id. The bucket of a key is
-        # a pure function of (key values, key column types, n_buckets), all
-        # of which are part of the cache key, so entries stay valid across
-        # commits and even rebuckets (a rebucket changes n_buckets and so
-        # misses). Bounds the 1-row Spark job in candidate_files to one per
-        # DISTINCT key per layout — repeated/hot-key lookups are driver-only.
-        self._bucket_memo: dict[tuple, int] = {}
 
     @property
     def mor_delta_cap(self) -> int:
@@ -935,52 +970,54 @@ class SnapshotTable:
     def candidate_files(self, key: tuple) -> list[dict[str, Any]]:
         """Live files that can contain ``key``: its hash bucket's entries
         narrowed by per-file min/max stats — the P8 'stats replace indexes'
-        path. One trivial 1-row Spark job computes the bucket with the SAME
-        xxhash64 the writer used (literals CAST to the table's key column
-        types — xxhash64(int32) != xxhash64(int64) of the same value); with
-        a grouped manifest only the bucket's own group file is parsed, so
-        driver IO stays O(group), not O(table). The manifest is loaded
-        once."""
+        path. The bucket is computed on the driver with the writer's
+        xxhash64 (:mod:`.buckethash`), each value hashed AT the table's key
+        column type — xxhash64(int32) != xxhash64(int64) of the same value
+        — so the search launches no Spark job. With a grouped manifest
+        only the bucket's own group file is parsed, so driver IO stays
+        O(group), not O(table). The manifest is loaded once."""
         m = self.manifest()
         if m is None:
             return []
-        schema = T.StructType.fromJson(m["schema"])
+        vals = self._coerce_key(T.StructType.fromJson(m["schema"]), key)
+        return [] if vals is None else self._key_candidates(m, vals)
+
+    def _coerce_key(self, schema: T.StructType, key: tuple) -> tuple | None:
+        """``key`` with each value in its key column's domain (a Python int
+        for a bigint column, ...); None when a value is out of its column
+        type's range, so no row can hold the key."""
         types = {f.name: f.dataType for f in schema.fields}
+        try:
+            return tuple(
+                buckethash.coerce(v, types[c])
+                for c, v in zip(self.key_cols, key)
+            )
+        except ValueError:
+            return None
+
+    def _key_candidates(
+        self, m: dict[str, Any], vals: tuple
+    ) -> list[dict[str, Any]]:
+        """:meth:`candidate_files` for an already-coerced key."""
+        types = {
+            f.name: f.dataType
+            for f in T.StructType.fromJson(m["schema"]).fields
+        }
         # placement hash covers only the bucket columns (the full key when
         # prefix bucketing is off) — a prefix-bucketed table places every
-        # (band, *) key in band's bucket, and the lookup must follow suit
-        pcols = self.placement_cols
-        pkey = key[: len(pcols)]
-        lits = [
-            F.lit(v).cast(types[c]) if c in types else F.lit(v)
-            for c, v in zip(pcols, pkey)
-        ]
-        # bucket count from the MANIFEST, not the handle: a long-lived
+        # (band, *) key in band's bucket, and the lookup must follow suit.
+        # Bucket count from the MANIFEST, not the handle: a long-lived
         # reader attached before a rebucket() must probe under the layout
         # the files were actually written with, or lookups silently miss
-        n_buckets = m.get("n_buckets", self.n_buckets)
-        memo_key = (
-            pkey, n_buckets,
-            tuple(str(types.get(c)) for c in pcols),
+        pcols = self.placement_cols
+        b = buckethash.bucket_of(
+            vals[: len(pcols)], [types[c] for c in pcols],
+            m.get("n_buckets", self.n_buckets),
         )
-        b = self._bucket_memo.get(memo_key)
-        if b is None:
-            b = (
-                self.spark.range(1)
-                .select(
-                    F.pmod(F.xxhash64(*lits), F.lit(n_buckets))
-                    .cast("int")
-                    .alias("b")
-                )
-                .first()["b"]
-            )
-            if len(self._bucket_memo) >= 65536:  # bound driver memory
-                self._bucket_memo.clear()
-            self._bucket_memo[memo_key] = b
         return [
             f
             for f in self._bucket_entries(b, m)
-            if _keys_hit_file([key], f.get("key_stats"), self.key_cols)
+            if _keys_hit_file([vals], f.get("key_stats"), self.key_cols)
         ]
 
     def _bucket_entries(
@@ -1003,66 +1040,85 @@ class SnapshotTable:
         return [f for f in m.get("files", []) if f["bucket"] == bucket]
 
     def lookup(self, *key_values, candidates: list[dict] | None = None) -> DataFrame:
-        """Point read of one key: scans only the candidate files (typically
-        ONE) instead of the table. The CDC-consumer face of cluster-ordered
-        writes + footer stats. Pass ``candidates`` (from
-        :meth:`candidate_files`) to avoid recomputing them."""
+        """Point read of one key with no Spark job. The candidate files
+        (typically ONE) are read on the driver with Arrow under a null-safe
+        key equality, which row-group stats prune on, and each is aligned
+        to the manifest schema: a column the file predates reads as null,
+        a narrower type widens. The max-``order_col`` row wins, so a live
+        MOR delta row supersedes its stale base row, and a tombstoned
+        winner hides the key. The result is a local DataFrame:
+        ``collect()`` and ``first()`` on it launch no job. Pass
+        ``candidates`` (from :meth:`candidate_files`) to avoid recomputing
+        them."""
         key = tuple(key_values)
         if len(key) != len(self.key_cols):
             raise ValueError(f"expected values for {self.key_cols}")
-        files = candidates if candidates is not None else self.candidate_files(key)
-        base, deltas = self._split_kinds(files)
-        df = self._read_files(files, self.schema())
-        for c, v in zip(self.key_cols, key):
-            # `col = NULL` is never true in SQL; a null key needs isNull
-            df = df.where(F.col(c).isNull() if v is None else F.col(c) == v)
-        if deltas:
-            # a candidate delta row supersedes a stale base row for the key;
-            # all candidate rows read the same few files, so folding here is
-            # a trivial aggregate over <= a handful of rows
-            cols = df.columns
-            df = self._latest_delta_rows(df).select(*cols)
-        if TOMBSTONE_COL in df.columns:
-            df = df.where(~F.coalesce(F.col(TOMBSTONE_COL), F.lit(False)))
-        return df
+        m = self.manifest()
+        if m is None:
+            raise FileNotFoundError(f"table {self.root} has no committed snapshot")
+        schema = T.StructType.fromJson(m["schema"])
+        target = to_arrow_schema(schema)
+        vals = self._coerce_key(schema, key)
+        if vals is None:
+            files = []
+        else:
+            files = (candidates if candidates is not None
+                     else self._key_candidates(m, vals))
+        parts = [
+            _read_key_rows(f["path"], dict(zip(self.key_cols, vals)), target)
+            for f in files
+        ]
+        # combine_chunks: createDataFrame drops the rows that follow an
+        # empty leading chunk (PySpark 4.1), and most candidates are empty
+        tbl = (pa.concat_tables(parts) if parts
+               else target.empty_table()).combine_chunks()
+        if tbl.num_rows > 1:
+            # write-time stale filtering makes a live delta row strictly
+            # newer than its base row, so the max order is the latest
+            order = tbl.column(self.order_col).to_pylist()
+            tbl = tbl.take([max(
+                range(len(order)),
+                key=lambda i: (order[i] is not None, order[i]),
+            )])
+        if (TOMBSTONE_COL in tbl.column_names and tbl.num_rows
+                and tbl.column(TOMBSTONE_COL)[0].as_py()):
+            tbl = tbl.slice(0, 0)
+        return self.spark.createDataFrame(tbl, schema=schema)
 
     def prefix_candidates(self, prefixes: list[tuple]) -> list[dict]:
         """Live files that can hold rows whose placement columns equal ANY
         of the probed prefix tuples — the bulk face of
         :meth:`candidate_files` for prefix-bucketed tables (an inverted
-        index probing hundreds of band keys per epoch wants one bucket
-        computation and one read, not hundreds of point lookups).
+        index probing hundreds of band keys per epoch wants one candidate
+        search and one read, not hundreds of point lookups).
 
-        ONE 1-job Spark computation hashes every distinct prefix to its
-        bucket (same xxhash64+cast discipline as candidate_files); files of
-        the hit buckets are then stats-pruned per prefix on the placement
-        columns. Cost: O(probed buckets' file entries), never O(table).
+        Each distinct prefix is hashed to its bucket on the driver (same
+        xxhash64-at-column-type discipline as candidate_files, no Spark
+        job); files of the hit buckets are then stats-pruned per prefix on
+        the placement columns. Cost: O(probed buckets' file entries), never
+        O(table).
         """
         m = self.manifest()
         if m is None or not prefixes:
             return []
         pcols = self.placement_cols
         n_buckets = m.get("n_buckets", self.n_buckets)
-        schema = T.StructType.fromJson(m["schema"])
-        by_name = {f.name: f for f in schema.fields}
-        pschema = T.StructType([by_name[c] for c in pcols])
-        uniq = _sorted_prefixes(prefixes, len(pcols))
-        rows = (
-            self.spark.createDataFrame(uniq, pschema)
-            .withColumn(
-                "_b",
-                F.pmod(
-                    F.xxhash64(*[F.col(c) for c in pcols]),
-                    F.lit(n_buckets),
-                ).cast("int"),
-            )
-            .collect()
-        )
+        types = {
+            f.name: f.dataType
+            for f in T.StructType.fromJson(m["schema"]).fields
+        }
+        ptypes = [types[c] for c in pcols]
         by_bucket: dict[int, list[tuple]] = {}
-        for r in rows:
-            by_bucket.setdefault(r["_b"], []).append(
-                tuple(r[c] for c in pcols)
-            )
+        for p in _sorted_prefixes(prefixes, len(pcols)):
+            try:
+                vals = tuple(
+                    buckethash.coerce(v, t) for v, t in zip(p, ptypes)
+                )
+            except ValueError:
+                continue  # out of the column type's range: no row holds it
+            by_bucket.setdefault(
+                buckethash.bucket_of(vals, ptypes, n_buckets), []
+            ).append(vals)
         out: list[dict] = []
         seen: set[str] = set()
         for b, pfx in sorted(by_bucket.items()):
@@ -1543,7 +1599,10 @@ class SnapshotTable:
         self.manifest(v)  # raises if the snapshot is gone
         final = self._tag_path(name)
         tmp = self.root / MANIFEST_DIR / f".tmp-{uuid.uuid4().hex}.json"
-        tmp.write_text(json.dumps({"version": v, "tagged_at": time.time()}))
+        with open(tmp, "w") as fh:
+            json.dump({"version": v, "tagged_at": time.time()}, fh)
+            fh.flush()
+            os.fsync(fh.fileno())
         try:
             os.link(tmp, final)
         except FileExistsError:
@@ -1840,7 +1899,7 @@ class SnapshotTable:
         )
         merged = (
             updates if "_bucket" in updates.columns
-            else self.arranged_updates(updates)
+            else self.arranged_updates(updates, _plan_bytes(updates))
         )
         staging, staged = self._stage_bucketed(merged, arranged=True)
         try:
@@ -2105,10 +2164,10 @@ class SnapshotTable:
         a KB-sized steady-state CDC delta would pay ~1,000 near-empty
         tasks per commit. Callers that know the batch's input size (the
         pipeline from its segment listing, the merge/compaction paths from
-        manifest byte counts) pass it here: one reducer per ~256 KB of
+        manifest byte counts, merge_epochs and replace_all otherwise from
+        the optimizer's estimate) pass it here: one reducer per ~256 KB of
         input, floored at the cluster's parallelism and capped at the
-        wide default. Unknown size keeps the wide default — correct for
-        the big-batch paths, merely slow for tiny ad-hoc merges.
+        wide default. Unknown size keeps the wide default.
         """
         wide = 4 * self.n_buckets
         if not size_bytes or size_bytes <= 0:
@@ -2429,7 +2488,8 @@ class SnapshotTable:
         ``size_hint``: input bytes of the batch, when the caller knows it
         (the pipeline's segment listing does) — sizes the staging exchange
         so a KB-sized delta does not pay a 4 x n_buckets-task shuffle
-        (:meth:`_staging_width`).
+        (:meth:`_staging_width`). Default: the optimizer's size estimate of
+        ``updates`` (:func:`_plan_bytes`).
 
         ``merge_mode`` overrides the table's write policy for THIS commit
         (``"cow"`` rewrite / ``"mor"`` delta files folded on read) — e.g. a
@@ -2448,6 +2508,8 @@ class SnapshotTable:
         applied the same epochs turns the retry into a skip; files written by
         the losing attempt become orphans for ``vacuum``.
         """
+        if size_hint is None:
+            size_hint = _plan_bytes(updates)
         if not assume_deduped and "_bucket" not in updates.columns:
             # Safe-by-default: the invariant "one row per key per file, key
             # sets disjoint across a bucket's files" is what makes file-level

@@ -253,7 +253,8 @@ def test_merge_handles_null_key_values(spark, tmpdir_path):
 
 def test_point_lookup_scans_only_candidate_files(spark, tmpdir_path):
     """lookup() reads the key's bucket narrowed by file stats — a point read
-    touches ~1 file of hundreds, and returns exactly the latest row."""
+    touches ~1 file of hundreds, returns exactly the latest row, and runs
+    no Spark job, before and after a rebucket."""
     t = SnapshotTable(spark, tmpdir_path, n_buckets=8, target_file_rows=10,
                       max_files_per_bucket=64)
     rows = [("r", f"p{i:04d}", "c000000000001", "x") for i in range(400)]
@@ -266,17 +267,16 @@ def test_point_lookup_scans_only_candidate_files(spark, tmpdir_path):
     got = t.lookup("r", "p0123").collect()
     assert len(got) == 1 and got[0].content == "updated"
     assert t.lookup("r", "nope").count() == 0
-    # repeat lookups memoize the bucket (no further 1-row Spark jobs): the
-    # memo key binds the layout, so a rebucket misses and recomputes
-    memo_before = dict(t._bucket_memo)
-    assert len(memo_before) >= 2  # p0123 + nope
+    # the candidate search and the read run on the driver: no Spark job
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    before = dag.nextJobId()
     cands2 = t.candidate_files(("r", "p0123"))
     assert [f["path"] for f in cands2] == [f["path"] for f in cands]
-    assert t._bucket_memo == memo_before
+    assert t.lookup("r", "p0123").collect()[0].content == "updated"
+    assert dag.nextJobId() == before
     t.rebucket(16)
     got = t.lookup("r", "p0123").collect()
     assert len(got) == 1 and got[0].content == "updated"
-    assert any(k[1] == 16 for k in t._bucket_memo)
 
 
 def test_grouped_manifest_lifecycle(spark, tmpdir_path):
@@ -546,3 +546,57 @@ def test_replace_all_overwrites_state(spark, tmpdir_path):
     assert {r.content for r in t.read().collect()} == {"v3"}
     # the pre-replace snapshot is still time-travel readable
     assert {r.content for r in t.read(version=1).collect()} == {"v5", "w5"}
+
+
+def test_hintless_small_merge_stages_at_default_parallelism(
+    spark, tmpdir_path
+):
+    """With no size_hint, merge_epochs and replace_all size the staging
+    exchange from the optimizer's estimate of the batch — for a parquet
+    read such as the mirror's change feed, the files' bytes: a few-row
+    merge gets defaultParallelism reducers, not the wide 4 x n_buckets
+    default."""
+    t = SnapshotTable(spark, f"{tmpdir_path}/t", n_buckets=64)
+    widths = []
+    width_of = t._staging_width
+    t._staging_width = lambda size: widths.append(width_of(size)) or widths[-1]
+
+    def batch(name, rows):
+        _df(spark, rows).write.parquet(f"{tmpdir_path}/{name}")
+        return spark.read.parquet(f"{tmpdir_path}/{name}")
+
+    t.merge_epoch(batch("b0", [("r", f"p{i}", "c000000000001", "x")
+                               for i in range(300)]), 0)
+    t.replace_all(batch("b1", [("r", "a", "c000000000002", "y")]), [0, 1])
+    par = spark.sparkContext.defaultParallelism
+    assert par < 4 * t.n_buckets
+    assert widths and set(widths) == {par}
+    assert [r.content for r in t.read().collect()] == ["y"]
+
+
+def test_tag_file_is_fsynced_before_link(spark, tmpdir_path, monkeypatch):
+    """tag() writes its temp file with the write-fsync-link discipline of
+    the manifest writers: the content is complete and fsynced before the
+    create-once link publishes it."""
+    import os
+
+    t = _tbl(spark, tmpdir_path)
+    t.merge_epoch(_df(spark, [("r", "a", "c000000000001", "x")]), 0)
+    events = []
+    fsync, link = os.fsync, os.link
+
+    def spy_fsync(fd):
+        events.append(("fsync", os.readlink(f"/proc/self/fd/{fd}")))
+        return fsync(fd)
+
+    def spy_link(src, dst):
+        events.append(("link", str(src), json.loads(Path(src).read_text())))
+        return link(src, dst)
+
+    monkeypatch.setattr(os, "fsync", spy_fsync)
+    monkeypatch.setattr(os, "link", spy_link)
+    assert t.tag("rc1") == {"tag": "rc1", "version": 1}
+    assert [e[0] for e in events] == ["fsync", "link"]
+    assert events[0][1] == events[1][1]
+    assert events[1][2]["version"] == 1
+    assert t.tags() == {"rc1": 1}
