@@ -211,13 +211,26 @@ def _plan_bytes(df: DataFrame) -> int:
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
+def _align(tbl: pa.Table, target: pa.Schema) -> pa.Table:
+    """``tbl`` in ``target``'s column order and types, as Spark reads a
+    file under the manifest schema: a column the file predates reads as
+    nulls and a narrower type widens (Spark's INT96 timestamps, read as
+    naive nanoseconds, become the schema's UTC microseconds)."""
+    return pa.Table.from_arrays(
+        [
+            tbl.column(f.name).cast(f.type) if f.name in tbl.column_names
+            else pa.nulls(tbl.num_rows, f.type)
+            for f in target
+        ],
+        schema=target,
+    )
+
+
 def _read_key_rows(path: str, key: dict, target: pa.Schema) -> pa.Table:
     """Rows of one parquet file whose key columns equal ``key`` (null-safe),
-    in ``target``'s column order and types: a column the file predates
-    reads as nulls and a narrower type widens. Each key value is cast to
-    the column's type IN THE FILE, so the filter compares like with like
-    (Spark's INT96 timestamps read as naive nanoseconds) and row-group
-    stats prune."""
+    aligned to ``target`` (:func:`_align`). Each key value is cast to the
+    column's type IN THE FILE, so the filter compares like with like and
+    row-group stats prune."""
     data = ds.dataset(path, format="parquet")
     cond = None
     for c, v in key.items():
@@ -228,15 +241,30 @@ def _read_key_rows(path: str, key: dict, target: pa.Schema) -> pa.Table:
                 data.schema.field(c).type
             )
         cond = eq if cond is None else cond & eq
-    tbl = data.to_table(filter=cond)
-    return pa.Table.from_arrays(
-        [
-            tbl.column(f.name).cast(f.type) if f.name in tbl.column_names
-            else pa.nulls(tbl.num_rows, f.type)
-            for f in target
-        ],
-        schema=target,
+    return _align(data.to_table(filter=cond), target)
+
+
+def _read_aligned(
+    path: str, target: pa.Schema, lead: pa.Array | None = None
+) -> pa.Table:
+    """``target``'s columns of one parquet file, aligned (:func:`_align`).
+    With ``lead``, only rows whose first ``target`` column is in ``lead``
+    (nulls included when ``lead`` holds one) are read; the values are cast
+    to the column's type IN THE FILE so row-group stats prune."""
+    data = ds.dataset(path, format="parquet")
+    cond = None
+    if lead is not None:
+        c = target.field(0).name
+        cond = pc.field(c).isin(
+            lead.drop_null().cast(data.schema.field(c).type)
+        )
+        if lead.null_count:
+            cond = cond | pc.field(c).is_null()
+    tbl = data.to_table(
+        columns=[c for c in target.names if c in data.schema.names],
+        filter=cond,
     )
+    return _align(tbl, target)
 
 
 def _stats_intersect(a: dict | None, b: dict | None) -> bool:
@@ -306,6 +334,16 @@ _WIDENINGS: dict[tuple[str, str], bool] = {
     ("integer", "long"): True,
     ("float", "double"): True,
 }
+
+
+# Column types whose Arrow/Python equality and ordering are Spark's, so the
+# driver-side stale filter (SnapshotTable._arrow_fresh_rows) decides exactly
+# as the Spark one would. Float and double are left out: Spark orders NaN
+# above every value and equal to itself.
+_PY_ORDERED_TYPES = (
+    T.StringType, T.BinaryType, T.BooleanType, T.ByteType, T.ShortType,
+    T.IntegerType, T.LongType, T.DecimalType, T.DateType, T.TimestampType,
+)
 
 
 def _widens_to(a: T.DataType, b: T.DataType) -> bool:
@@ -381,8 +419,9 @@ class SnapshotTable:
         can touch (copy-on-write — best for read-heavy tables and clustered
         deltas); ``"mor"`` (merge-on-read — Iceberg's equality-delete MERGE
         analog) instead promotes the staged delta as small DELTA files after
-        dropping write-stale rows, folding them into the base on read via a
-        per-key anti-join. A scattered hot-key delta then writes O(delta
+        dropping write-stale rows (judged on the driver with Arrow, at no
+        Spark job, for a sparse delta), folding them into the base on read
+        via a per-key anti-join. A scattered hot-key delta then writes O(delta
         rows) bytes instead of O(delta keys x target_file_rows); buckets
         whose live delta files exceed ``max_files_per_bucket // 2`` are
         folded back into base files at merge time, and ``compact()`` folds
@@ -2088,6 +2127,110 @@ class SnapshotTable:
             keys.extend(zip(*cols))
         return keys
 
+    def _arrow_fresh_rows(
+        self, staged: list[dict], live: list[dict], schema: T.StructType
+    ) -> int | None:
+        """The write-time stale filter's verdict on the driver, with no
+        Spark job: how many rows of the ``staged`` files strictly beat the
+        newest non-null ``order_col`` of their key in the ``live`` files.
+        None when a key or order type compares differently in Python than
+        in Spark (:data:`_PY_ORDERED_TYPES`); the caller then runs the
+        Spark filter.
+
+        Only the key and order columns are read, on a thread pool, and
+        each live file only where its first key column holds a staged
+        value, so row-group stats prune. Keys match null-safely (a
+        ``None`` in a tuple equals ``None``), as ``eqNullSafe`` does; a
+        staged row with a null order, or an order equal to the newest,
+        is stale."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        by_name = {f.name: f for f in schema.fields}
+        cols = [*self.key_cols, self.order_col]
+        if not all(
+            isinstance(by_name[c].dataType, _PY_ORDERED_TYPES) for c in cols
+        ):
+            return None
+        target = to_arrow_schema(T.StructType([by_name[c] for c in cols]))
+        with ThreadPoolExecutor(max_workers=16) as ex:
+            new = pa.concat_tables([target.empty_table(), *ex.map(
+                lambda f: _read_aligned(f["path"], target), staged
+            )])
+            lead = new.column(0).combine_chunks().unique()
+            old = pa.concat_tables([target.empty_table(), *ex.map(
+                lambda f: _read_aligned(f["path"], target, lead), live
+            )])
+        # Arrow's hash aggregate groups null keys together and its max
+        # skips null orders; a key whose orders are all null drops out
+        newest = (
+            old.group_by(list(self.key_cols), use_threads=False)
+            .aggregate([(self.order_col, "max")])
+            .filter(pc.is_valid(pc.field(f"{self.order_col}_max")))
+        )
+        latest = dict(zip(
+            zip(*[newest.column(c).to_pylist() for c in self.key_cols]),
+            newest.column(f"{self.order_col}_max").to_pylist(),
+        ))
+        kept = 0
+        for *key, order in zip(*[new.column(c).to_pylist() for c in cols]):
+            top = latest.get(tuple(key))
+            if top is None or (order is not None and order > top):
+                kept += 1
+        return kept
+
+    def _stale_filter_spark(
+        self, staged: list[dict], live: list[dict],
+        data_schema: T.StructType, schema: T.StructType,
+    ) -> DataFrame:
+        """The rows of the ``staged`` files that strictly beat the newest
+        live row of their key, as a Spark plan: a column-pruned (keys +
+        order) scan of the ``live`` files, semi-joined to the staged keys
+        so the max-order aggregate shuffles O(delta keys) rows, then a
+        null-safe left join. Same broadcast guard as the read fold: a
+        backfill-sized commit mis-routed through MOR degrades to a
+        shuffle, not an OOM (the staged row count is exact, from the
+        footers)."""
+        n_staged = sum(f["rows"] for f in staged)
+        kcols = list(self.key_cols)
+        staged_df = self._read_files(staged, data_schema)
+        existing = self._read_files(live, schema).select(
+            *kcols, self.order_col
+        )
+
+        def _bc(df: DataFrame) -> DataFrame:
+            if n_staged > self.fold_broadcast_rows:
+                return df
+            return F.broadcast(df)
+
+        skeys = _bc(
+            staged_df.select(*[F.col(k).alias(f"_s_{k}") for k in kcols])
+        )
+        sem = None
+        for k in kcols:
+            c = existing[k].eqNullSafe(F.col(f"_s_{k}"))
+            sem = c if sem is None else (sem & c)
+        emax = (
+            existing.join(skeys, sem, "left_semi")
+            .groupBy(*kcols)
+            .agg(F.max(self.order_col).alias("_e_order"))
+            .select(
+                *[F.col(k).alias(f"_e_{k}") for k in kcols],
+                "_e_order",
+            )
+        )
+        jc = None
+        for k in kcols:
+            c = staged_df[k].eqNullSafe(F.col(f"_e_{k}"))
+            jc = c if jc is None else (jc & c)
+        return (
+            staged_df.join(_bc(emax), jc, "left")
+            .where(
+                F.col("_e_order").isNull()
+                | (staged_df[self.order_col] > F.col("_e_order"))
+            )
+            .select(*[f.name for f in data_schema.fields])
+        )
+
     def _probe_hit_names(
         self,
         candidates: list[dict],
@@ -2936,56 +3079,35 @@ class SnapshotTable:
                 # their key. This makes delta files self-sufficient — for any
                 # key, later files always carry strictly greater order — so
                 # the read-side fold is a plain broadcast anti-join with no
-                # per-file sequencing. Cost: one column-pruned (keys + order)
-                # scan of exactly the files the delta's keys can touch.
+                # per-file sequencing. Cost: a read of the key and order
+                # columns of exactly the files the delta's keys can touch.
+                # A sparse delta (the steady-state CDC commit) is judged on
+                # the driver with Arrow, at no Spark job, within the limits
+                # the engine already trusts the driver with: key_probe_limit
+                # staged rows (as in _probe_staged_keys) and
+                # fold_broadcast_rows live rows (the broadcast guard). The
+                # verdict is all-fresh (promote) or all-stale (metadata-only
+                # commit) in the common case; only a mix (a cross-epoch late
+                # re-delivery) needs a filtered copy written, and that, like
+                # any larger delta, runs on Spark.
                 seq = (m["version"] + 1) if m else 1
                 n_staged = sum(f["rows"] for f in mor_delta_raw)
-                kcols = list(self.key_cols)
-                staged_df = self._read_files(mor_delta_raw, data_schema)
-                existing = self._read_files(stale_check, merged_schema).select(
-                    *kcols, self.order_col
-                )
-                # pre-filter to the delta's keys so the max-order aggregate
-                # shuffles O(delta keys) rows, not O(touched files x rows).
-                # Same broadcast guard as the read fold: a backfill-sized
-                # commit mis-routed through MOR must degrade to a shuffle,
-                # not OOM (n_staged is exact, from the staged footers)
-                def _bc(df: DataFrame) -> DataFrame:
-                    if n_staged > self.fold_broadcast_rows:
-                        return df
-                    return F.broadcast(df)
-
-                skeys = _bc(
-                    staged_df.select(
-                        *[F.col(k).alias(f"_s_{k}") for k in kcols]
+                n_kept = None
+                if (
+                    n_staged <= self.key_probe_limit
+                    and sum(f["rows"] for f in stale_check)
+                    <= self.fold_broadcast_rows
+                ):
+                    n_kept = self._arrow_fresh_rows(
+                        mor_delta_raw, stale_check, merged_schema
                     )
-                )
-                sem = None
-                for k in kcols:
-                    c = existing[k].eqNullSafe(F.col(f"_s_{k}"))
-                    sem = c if sem is None else (sem & c)
-                emax = (
-                    existing.join(skeys, sem, "left_semi")
-                    .groupBy(*kcols)
-                    .agg(F.max(self.order_col).alias("_e_order"))
-                    .select(
-                        *[F.col(k).alias(f"_e_{k}") for k in kcols],
-                        "_e_order",
+                if n_kept is None or 0 < n_kept < n_staged:
+                    kept = self._stale_filter_spark(
+                        mor_delta_raw, stale_check, data_schema,
+                        merged_schema,
                     )
-                )
-                jc = None
-                for k in kcols:
-                    c = staged_df[k].eqNullSafe(F.col(f"_e_{k}"))
-                    jc = c if jc is None else (jc & c)
-                kept = (
-                    staged_df.join(_bc(emax), jc, "left")
-                    .where(
-                        F.col("_e_order").isNull()
-                        | (staged_df[self.order_col] > F.col("_e_order"))
-                    )
-                    .select(*[f.name for f in data_schema.fields])
-                )
-                n_kept = kept.count()
+                    if n_kept is None:
+                        n_kept = kept.count()
                 stale_dropped = n_staged - n_kept
                 if n_kept == n_staged:
                     # the common CDC case (every delta row is fresh): the

@@ -179,6 +179,14 @@ class Mirror:
                     "synced_version": v_from}
         epoch_ids = list(range((v_from or 0) + 1, v_to + 1))
         if v_from is None:
+            if self.dst.current_version() is not None:
+                # a bootstrap REPLACES the destination: into a table this
+                # mirror never synced (a mistyped --dst naming a live
+                # table) it would silently overwrite unrelated rows
+                raise ValueError(
+                    f"table {self.dst.root} already has snapshots but no "
+                    "mirror sync; refusing to bootstrap a mirror over it"
+                )
             return self._full_resync(v_to, epoch_ids, "bootstrap")
         reason = self._needs_resync(v_from, v_to)
         if reason is not None:

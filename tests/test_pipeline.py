@@ -149,3 +149,26 @@ def test_lineage_log_covers_all_epochs(replayed):
     assert set(log["epoch"]) == set(range(N_EPOCHS))
     assert (log["row_count"] > 0).all()
     assert (log["min_lsn"] <= log["max_lsn"]).all()
+
+
+def test_events_read_from_footers_equals_raw_count(replayed, stream):
+    """``events_read`` is summed from the segment files' parquet footers,
+    with no Spark job; it must equal ``count()`` of the same read — on a
+    stream with re-deliveries and an additive column from epoch 2, one
+    segment at a time and as one catch-up batch spanning the column's
+    appearance."""
+    from etl_spark.pipeline import _footer_rows
+
+    pipe, stats = replayed
+    segs = discover_segments(stream)
+    assert [s.events_read for s in stats] == [
+        pipe._read_segments([seg]).count() for seg in segs
+    ]
+    raw = pipe._read_segments(segs)
+    try:
+        assert "metadata" in raw.columns
+        assert _footer_rows(raw) == raw.count() > N_EVENTS
+    finally:
+        pipe.spark.conf.set(
+            "spark.sql.files.maxPartitionBytes", pipe._prev_split or "128m"
+        )

@@ -199,6 +199,23 @@ def test_sync_refuses_wrong_source(spark, tmpdir_path):
     assert _same(mir)  # untouched
 
 
+def test_first_sync_refuses_to_bootstrap_over_unrelated_table(
+    spark, tmpdir_path
+):
+    """A first sync into a destination that already holds snapshots but was
+    never a mirror (a mistyped --dst naming a live table) must fail, not
+    replace that table's rows with the source's."""
+    src = _tbl(spark, f"{tmpdir_path}/src")
+    src.merge_epoch(_df(spark, [("r", "x", "c000000000001", "vs")]), 0)
+    live = _tbl(spark, f"{tmpdir_path}/live")
+    live.merge_epoch(_df(spark, [("r", "y", "c000000000001", "vl")]), 0)
+    before = _state(live)
+    with pytest.raises(ValueError, match="refusing to bootstrap"):
+        Mirror(spark, src, f"{tmpdir_path}/live").sync()
+    assert live.current_version() == 1
+    assert _state(live) == before
+
+
 def test_chained_feed_from_replica(spark, tmpdir_path):
     """The staged-consumer chain: a consumer polling the REPLICA's change
     feed sees exactly the synced deltas — possible only because mirrored
