@@ -458,18 +458,19 @@ def main(argv: list[str] | None = None) -> int:
         if not t.exists():
             print(json.dumps({"table": args.table, "exists": False}))
             return 1
-        keys = spark.createDataFrame(
-            [(args.repo, args.path, args.commit)],
-            f"repo string, path string, {t.order_col} string",
-        )
-        # the order column is whatever type the table persisted (commit
-        # string here, but lsn tables use long) — cast the CLI's string
-        # form to it rather than hardcoding string
+        # a one-row projection of spark.range, not createDataFrame(list):
+        # the optimizer sizes it in bytes, so the delete stages at the
+        # cluster's parallelism instead of 4 x n_buckets reducers. The
+        # order column is whatever type the table persisted (commit string
+        # here, but lsn tables use long) — cast the CLI's string form to it
         from pyspark.sql import functions as F
 
-        keys = keys.withColumn(
-            t.order_col,
-            F.col(t.order_col).cast(t.schema()[t.order_col].dataType),
+        keys = spark.range(1).select(
+            F.lit(args.repo).alias("repo"),
+            F.lit(args.path).alias("path"),
+            F.lit(args.commit)
+            .cast(t.schema()[t.order_col].dataType)
+            .alias(t.order_col),
         )
         out = t.delete_epochs(keys, [args.epoch], merge_mode=args.merge_mode)
         print(json.dumps({
@@ -649,7 +650,7 @@ def main(argv: list[str] | None = None) -> int:
                 amps.append(cs["rewritten_rows"] / cs["staged_rows"])
         median_amp = sorted(amps)[len(amps) // 2] if amps else None
         suggest_auto = bool(
-            m.get("merge_mode", "cow") == "cow"
+            m["merge_mode"] == "cow"
             and len(amps) >= 2
             and median_amp > t.auto_mor_factor
         )
@@ -696,7 +697,7 @@ def main(argv: list[str] | None = None) -> int:
                         max(1, (m.get("target_file_rows") or 1_000_000)
                             * (m.get("max_files_per_bucket") or 16)),
                     ),
-                    "merge_mode": m.get("merge_mode", "cow"),
+                    "merge_mode": m["merge_mode"],
                     "compact_after_commit": m.get(
                         "compact_after_commit", "off"
                     ),

@@ -37,6 +37,7 @@ DISTINCT-ON + anti-join insert (create_duckdb_points.py:151-173).
 from __future__ import annotations
 
 import json
+import math
 import os
 import time
 import uuid
@@ -288,6 +289,102 @@ def _stats_intersect(a: dict | None, b: dict | None) -> bool:
     return True
 
 
+def _files_hit(
+    files: list[dict], keys: list[tuple] | None, sref: list[dict],
+    key_cols: tuple[str, ...],
+) -> list[dict]:
+    """The ``files`` that may hold a key of the ``sref`` files. With the
+    probed key tuples (a sparse delta) containment is exact per key: a
+    scattered delta's min/max envelope spans the whole domain and would
+    hit every file. ``keys`` None (too many to probe) falls back to
+    envelope overlap. Files without stats always hit."""
+    if keys is not None:
+        return [
+            f for f in files
+            if _keys_hit_file(keys, f.get("key_stats"), key_cols)
+        ]
+    return [
+        f for f in files
+        if any(_stats_intersect(f.get("key_stats"), s.get("key_stats"))
+               for s in sref)
+    ]
+
+
+def _plan_bucket(
+    olds: list[dict], staged: list[dict], keys_of, *, factor: float,
+    cap: int, allowance: int, key_cols: tuple[str, ...],
+) -> tuple[str, list[dict], list[dict]]:
+    """The merge rule for one bucket: what a commit of the ``staged`` files
+    does with the bucket's live ``olds``. Pure: it reads only manifest
+    entries and ``keys_of(files)``, the key tuples of ``files`` (None when
+    too many to probe).
+
+    ``factor`` is the write policy: ``inf`` for cow, 0 for mor,
+    ``auto_mor_factor`` for auto. Each step applies when the ones before
+    it do not:
+
+    1. more files than ``allowance`` (fragmented): rewrite the bucket;
+    2. no existing files: promote the staged files;
+    3. live deltas + staged files > ``cap``: rewrite the base files the
+       staged and live-delta keys hit, and the live deltas (a fold);
+    4. no base file is hit by the staged keys and no live delta exists:
+       promote the staged files;
+    5. rows of the hit base files and the live deltas exceed ``factor`` x
+       the staged rows: write the staged files as a MOR delta;
+    6. otherwise rewrite as in step 3.
+
+    Returns ``(action, hit, forced)``. For ``"rewrite"`` the files to
+    rewrite with the staged rows are ``hit`` (base files the keys' stats
+    hit, which an exact probe may still drop) plus ``forced``; for
+    ``"delta"`` they are the files the stale filter reads; for
+    ``"promote"`` both are empty and every old file is carried. A bucket
+    never ends with more than ``cap`` delta files."""
+    if len(olds) + len(staged) > allowance:
+        return "rewrite", [], list(olds)
+    if not olds:
+        return "promote", [], []
+    base, deltas = SnapshotTable._split_kinds(olds)
+    skeys = keys_of(staged)
+
+    def rewrite():
+        # folding the live deltas rewrites every base file that may hold
+        # one of THEIR keys too: the staged keys alone could carry a base
+        # file holding a delta key and leave two base rows for one key
+        # (found by the lifecycle fuzz, seed 303)
+        keys = skeys
+        if deltas and skeys is not None:
+            dkeys = keys_of(deltas)
+            keys = None if dkeys is None else skeys + dkeys
+        hit = _files_hit(base, keys, staged + deltas, key_cols)
+        return "rewrite", hit, deltas
+
+    if len(deltas) + len(staged) > cap:
+        return rewrite()
+    hit = _files_hit(base, skeys, staged, key_cols)
+    if not hit and not deltas:
+        return "promote", [], []
+    moved = sum(f["rows"] for f in hit + deltas)
+    if moved > factor * max(1, sum(f["rows"] for f in staged)):
+        return "delta", hit, deltas
+    return rewrite()
+
+
+def _link_json(obj: Any, final: Path) -> None:
+    """Create ``final`` holding ``obj`` as JSON, durably and only once:
+    write a temp file beside it, fsync it, hard-link it to ``final``
+    (atomic create-if-absent: FileExistsError when ``final`` exists) and
+    unlink the temp file."""
+    tmp = final.parent / f".tmp-{uuid.uuid4().hex}.json"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+        fh.flush()
+        os.fsync(fh.fileno())
+    try:
+        os.link(tmp, final)
+    finally:
+        os.unlink(tmp)
+
+
 def _delta_files_by_bucket(entries: list[dict]) -> dict[str, int]:
     """Per-bucket live MOR delta-file counts over a list of file entries.
     Keys are stringified bucket ids (the rollup is persisted as JSON);
@@ -432,13 +529,16 @@ class SnapshotTable:
         staged rows takes the MOR path (write amplification bounded), a
         proportionate delta (bulk load, backfill, clustered burst) takes
         COW (no read debt), and fragmentation/delta-cap hits fold as usual
-        — so one commit can mix modes across buckets.
+        — so one commit can mix modes across buckets. The three modes are
+        ONE per-bucket rule, :func:`_plan_bucket`, and the mode only sets
+        its factor: ``cow`` is auto at an infinite factor (never a MOR
+        delta), ``mor`` is auto at 0 (a MOR delta whenever the bucket is
+        not fragmented, has files, stays within the delta cap and is hit
+        by the delta or holds live deltas).
         Differential-tested: AUTO == MOR == COW final state.
         ``"auto"`` is the default for NEW tables (round-4 bench: auto
         matches best-of-both on clustered AND scattered shapes). Existing
-        tables keep their persisted policy; tables created before the
-        policy was persisted stay ``"cow"`` (the default they were written
-        under) until explicitly retuned.
+        tables keep their persisted policy until explicitly retuned.
 
         Manifest scaling: up to ``manifest_inline_files`` file entries live
         inline in the manifest JSON; past that, entries split into
@@ -498,14 +598,6 @@ class SnapshotTable:
         self.max_files_per_bucket = max_files_per_bucket
         self.manifest_groups = manifest_groups
         self.manifest_inline_files = manifest_inline_files
-        # rollup memo for PRE-rollup legacy group refs (no delta_rows /
-        # delta_files_by_bucket in the ref): group files are uuid-named and
-        # immutable, so the path is a safe cache key. Without it, a
-        # long-lived writer with compact_after_commit="auto" (which calls
-        # compaction_advice after EVERY commit) would re-read every cold
-        # legacy group file per commit — O(all legacy groups) JSON reads
-        # that no commit ever rewrites away.
-        self._legacy_rollup_memo: dict[str, tuple[int, dict[str, int]]] = {}
         if merge_mode not in (None, "cow", "mor", "auto"):
             raise ValueError(f"unknown merge_mode {merge_mode!r}")
         if compact_after_commit not in (None, "off", "auto"):
@@ -534,9 +626,9 @@ class SnapshotTable:
         # the shuffle fold. Persisted write policy like merge_mode.
         self.compact_after_commit = compact_after_commit
         # None = adopt the table's persisted write policy (default "auto"
-        # for new tables, "cow" for pre-policy legacy tables);
-        # an EXPLICIT value wins — merge_mode is a mutable write-policy knob
-        # (Iceberg: ALTER ... write.merge.mode), not a layout invariant
+        # for new tables); an EXPLICIT value wins — merge_mode is a mutable
+        # write-policy knob (Iceberg: ALTER ... write.merge.mode), not a
+        # layout invariant
         self.merge_mode = merge_mode
         (self.root / MANIFEST_DIR).mkdir(parents=True, exist_ok=True)
         (self.root / DATA_DIR).mkdir(parents=True, exist_ok=True)
@@ -564,10 +656,7 @@ class SnapshotTable:
             if self.target_file_rows is None:
                 self.target_file_rows = m.get("target_file_rows")
             if self.merge_mode is None:
-                # migration rule: persisted policy wins; a pre-policy
-                # legacy table (no merge_mode in its manifest) stays on
-                # the "cow" default it was written under
-                self.merge_mode = m.get("merge_mode") or "cow"
+                self.merge_mode = m.get("merge_mode")
             if self.fold_broadcast_rows is None:
                 self.fold_broadcast_rows = m.get("fold_broadcast_rows")
             if self.compact_after_commit is None:
@@ -707,10 +796,8 @@ class SnapshotTable:
         hook and ``cli status``, so the two sites cannot drift. On a
         grouped manifest this reads only the group refs' ``rows`` /
         ``bytes`` / ``n_files`` / ``delta_rows`` / ``delta_files_by_bucket``
-        rollups (a pre-rollup legacy ref is loaded once per Table instance
-        via the rollup memo; it is rewritten with rollups on its next
-        touch) — never the group files themselves,
-        so ``status`` on a 100k-file table costs one manifest read.
+        rollups — never the group files themselves, so ``status`` on a
+        100k-file table costs one manifest read.
 
         ``suggested_compact`` fires when live delta ROWS exceed half the
         broadcast-fold guard (the read plan is approaching the degraded
@@ -724,23 +811,8 @@ class SnapshotTable:
         delta_rows = files = rows = nbytes = 0
         if m is not None and "file_groups" in m:
             for g in m["file_groups"]:
-                dr = g.get("delta_rows")
-                fb = g.get("delta_files_by_bucket")
-                if dr is None or fb is None:
-                    cached = self._legacy_rollup_memo.get(g["path"])
-                    if cached is None:
-                        ent = self._load_group(g)
-                        cached = (
-                            sum(
-                                f["rows"] for f in ent
-                                if f.get("kind") == "delta"
-                            ),
-                            _delta_files_by_bucket(ent),
-                        )
-                        self._legacy_rollup_memo[g["path"]] = cached
-                    dr, fb = cached
-                delta_rows += dr
-                for b, n in fb.items():
+                delta_rows += g["delta_rows"]
+                for b, n in g["delta_files_by_bucket"].items():
                     per_bucket[b] = per_bucket.get(b, 0) + n
                 files += g["n_files"]
                 rows += g["rows"]
@@ -841,6 +913,22 @@ class SnapshotTable:
         m = self.manifest()
         return T.StructType.fromJson(m["schema"]) if m else None
 
+    def _layout_fields(self) -> dict[str, Any]:
+        """The layout and write-policy fields a full manifest persists,
+        from this handle; attaching adopts them back."""
+        return {
+            "key_cols": list(self.key_cols),
+            "bucket_cols": list(self.bucket_cols) if self.bucket_cols else None,
+            "order_col": self.order_col,
+            "n_buckets": self.n_buckets,
+            "max_files_per_bucket": self.max_files_per_bucket,
+            "target_file_rows": self.target_file_rows,
+            "merge_mode": self.merge_mode,
+            "fold_broadcast_rows": self.fold_broadcast_rows,
+            "compact_after_commit": self.compact_after_commit,
+            "rewrite_probe": self.rewrite_probe,
+        }
+
     def _commit_manifest(self, manifest: dict[str, Any], base_version: int | None = None) -> int:
         """Atomically publish a manifest as the next version.
 
@@ -855,16 +943,7 @@ class SnapshotTable:
         version = base_version + 1
         manifest["version"] = version
         manifest["committed_at"] = time.time()
-        final = self.root / MANIFEST_DIR / f"v{version:012d}.json"
-        tmp = self.root / MANIFEST_DIR / f".tmp-{uuid.uuid4().hex}.json"
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        try:
-            os.link(tmp, final)  # atomic create-if-absent
-        finally:
-            os.unlink(tmp)
+        _link_json(manifest, self.root / MANIFEST_DIR / f"v{version:012d}.json")
         return version
 
     def _write_staged_manifest(
@@ -882,21 +961,13 @@ class SnapshotTable:
         manifest["base_version"] = base_version
         manifest["staged_epochs"] = sorted(epochs)
         manifest["committed_at"] = time.time()
-        final = self._staged_path(name)
-        tmp = self.root / MANIFEST_DIR / f".tmp-{uuid.uuid4().hex}.json"
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
         try:
-            os.link(tmp, final)
+            _link_json(manifest, self._staged_path(name))
         except FileExistsError:
             raise StagedRefExistsError(
                 f"staged ref {name!r} already exists on {self.root}; "
                 "publish or abort it first"
             ) from None
-        finally:
-            os.unlink(tmp)
 
     # ---- read ----------------------------------------------------------------
 
@@ -1540,20 +1611,27 @@ class SnapshotTable:
         Crash-idempotent: the staged manifest carries a ``staged_uuid`` that
         survives into the published manifest, so a re-run after a crash
         between the version link and the staged-ref unlink recognizes its
-        own publish (uuid match) and finishes the cleanup instead of
-        failing."""
+        own publish (uuid match in any retained snapshot past the base,
+        also when later commits landed since) and finishes the cleanup
+        instead of failing."""
         staged = self.staged_manifest(name)
         base = staged.pop("base_version", 0)
         suid = staged.get("staged_uuid")
 
         def _already_published() -> dict[str, Any] | None:
-            m_cur = self.manifest()
-            if m_cur is not None and suid and m_cur.get("staged_uuid") == suid:
-                self._staged_path(name).unlink(missing_ok=True)
-                return {
-                    "version": m_cur["version"], "published": name,
-                    "already_published": True,
-                }
+            # any retained snapshot past the base may be the publish: later
+            # commits can land before the re-run
+            for v in (v for v in self.versions() if v > base):
+                try:
+                    mv = self.manifest(v)
+                except FileNotFoundError:
+                    continue  # expired between the listing and the read
+                if suid and mv.get("staged_uuid") == suid:
+                    self._staged_path(name).unlink(missing_ok=True)
+                    return {
+                        "version": v, "published": name,
+                        "already_published": True,
+                    }
             return None
 
         cur = self.current_version() or 0
@@ -1636,21 +1714,15 @@ class SnapshotTable:
                 f"table {self.root} has no committed snapshot to tag"
             )
         self.manifest(v)  # raises if the snapshot is gone
-        final = self._tag_path(name)
-        tmp = self.root / MANIFEST_DIR / f".tmp-{uuid.uuid4().hex}.json"
-        with open(tmp, "w") as fh:
-            json.dump({"version": v, "tagged_at": time.time()}, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
         try:
-            os.link(tmp, final)
+            _link_json(
+                {"version": v, "tagged_at": time.time()}, self._tag_path(name)
+            )
         except FileExistsError:
             raise StagedRefExistsError(
                 f"tag {name!r} already exists on {self.root} "
                 f"(at v{self.tag_version(name)}); delete_tag it first"
             ) from None
-        finally:
-            os.unlink(tmp)
         return {"tag": name, "version": v}
 
     def tags(self) -> dict[str, int]:
@@ -1696,8 +1768,9 @@ class SnapshotTable:
         decision, off by default.
 
         Delta-carrying buckets that are NOT fragmented get a SELECTIVE fold
-        (mirroring the merge path's cap-hit fold): only base files whose key
-        stats intersect the bucket's delta keys are rewritten; disjoint base
+        (the merge path's cap fold, planned by the same
+        :func:`_plan_bucket`): only base files whose key stats intersect
+        the bucket's delta keys are rewritten; disjoint base
         files are carried untouched. The debt fold therefore costs
         O(intersecting files), not O(files in delta buckets) — at 100 TB a
         scattered 10^3-key delta folds by rewriting ~10^3 files instead of
@@ -1740,69 +1813,44 @@ class SnapshotTable:
         by_bucket: dict[int, list] = {}
         for f in all_files:
             by_bucket.setdefault(f["bucket"], []).append(f)
-        # buckets holding MOR delta files are always folded: compaction is
-        # the lazy path that turns accumulated read-side fold work back into
-        # clean base files (Iceberg rewrite_data_files on a MOR table)
-        delta_buckets = {
-            b for b, fl in by_bucket.items()
-            if any(f.get("kind") == "delta" for f in fl)
-        }
-        if above is not None:
-            # explicit override: absolute file-count threshold
-            victims = {b for b, fl in by_bucket.items() if len(fl) > above}
-        else:
-            # default trigger is rows-aware: a bucket is a victim when
-            # FRAGMENTED (holds more files than its rows require plus slack),
-            # not merely large — a bucket legitimately needing many
-            # target-size files must not be rewritten on every compact()
-            slack = self.mor_delta_cap
-
-            def _needed(fl):
-                rows = sum(f["rows"] for f in fl)
-                return -(-rows // max(self.target_file_rows, 1))
-
-            victims = {
-                b for b, fl in by_bucket.items()
-                if len(fl) > max(slack, _needed(fl) + slack)
-            }
-        # non-fragmented delta buckets fold selectively; fragmented ones
-        # (and every bucket under purge_tombstones) rewrite whole
-        selective = set() if purge_tombstones else delta_buckets - victims
-        victims |= delta_buckets
+        # the merge rule with no staged files and a delta cap of 0: a
+        # fragmented bucket rewrites whole, a bucket holding MOR deltas
+        # folds them with the base files their keys hit, the rest carry.
+        # Fragmented means more files than an explicit ``above``, or than
+        # the rows require plus slack (a bucket legitimately needing many
+        # target-size files is not rewritten on every compact()). Under
+        # purge_tombstones a delta bucket rewrites whole too.
+        victims: list[int] = []
+        old: list[dict] = []
+        carried: list[dict] = []
+        selective = base_files_skipped = 0
+        for b, fl in sorted(by_bucket.items()):
+            if purge_tombstones and any(f.get("kind") == "delta" for f in fl):
+                allowance = -1
+            elif above is not None:
+                allowance = above
+            else:
+                allowance = self.mor_delta_cap - (
+                    -sum(f["rows"] for f in fl)
+                    // max(self.target_file_rows, 1)
+                )
+            _, hit, forced = _plan_bucket(
+                fl, [], self._probe_staged_keys, factor=math.inf, cap=0,
+                allowance=allowance, key_cols=self.key_cols,
+            )
+            if not forced:
+                carried += fl
+                continue
+            victims.append(b)
+            paths = {f["path"] for f in hit + forced}
+            kept = [f for f in fl if f["path"] not in paths]
+            carried += kept
+            base_files_skipped += len(kept)
+            if len(fl) <= allowance:
+                selective += 1  # a fold, not a whole-bucket rewrite
+            old += hit + forced
         if not victims:
             return _noop(m, len(all_files))
-        old = []
-        carried = [f for f in all_files if f["bucket"] not in victims]
-        base_files_skipped = 0
-        for b in sorted(victims):
-            fl = by_bucket[b]
-            if b not in selective:
-                old += fl
-                continue
-            base, deltas = self._split_kinds(fl)
-            # same two-tier probe as the merge path: exact per-key
-            # containment read driver-side from the tiny delta files when
-            # the debt is sparse (scattered keys defeat envelope pruning),
-            # envelope overlap past the probe guard
-            keys = self._probe_staged_keys(deltas)
-            if keys is not None:
-                inter = [
-                    f for f in base
-                    if _keys_hit_file(keys, f.get("key_stats"),
-                                      self.key_cols)
-                ]
-            else:
-                inter = [
-                    f for f in base
-                    if any(_stats_intersect(f.get("key_stats"),
-                                            d.get("key_stats"))
-                           for d in deltas)
-                ]
-            inter_paths = {f["path"] for f in inter}
-            disjoint = [f for f in base if f["path"] not in inter_paths]
-            carried += disjoint
-            base_files_skipped += len(disjoint)
-            old += inter + deltas
         schema = T.StructType.fromJson(m["schema"])
         merged = self.arranged_updates(
             self._read_files(old, schema),
@@ -1821,14 +1869,14 @@ class SnapshotTable:
             **{k: v for k, v in m.items()
                if k not in ("version", "committed_at", "files",
                             "file_groups", "commit_stats")},
-            "summary": {"compaction": {"buckets": sorted(victims)}},
+            "summary": {"compaction": {"buckets": victims}},
             "parent": m["version"],
         }
         self._attach_files(manifest, carried + new_files, prev=m)
         version = self._commit_manifest(manifest, base_version=m["version"])
         return {
             "compacted_buckets": len(victims),
-            "selective_buckets": len(selective),
+            "selective_buckets": selective,
             "base_files_skipped": base_files_skipped,
             "files_before": len(all_files),
             "files_after": len(carried) + len(new_files),
@@ -1969,18 +2017,7 @@ class SnapshotTable:
             manifest = {
                 "schema": schema.jsonValue(),
                 **spaces,
-                "key_cols": list(self.key_cols),
-                "bucket_cols": (
-                    list(self.bucket_cols) if self.bucket_cols else None
-                ),
-                "order_col": self.order_col,
-                "n_buckets": self.n_buckets,
-                "max_files_per_bucket": self.max_files_per_bucket,
-                "target_file_rows": self.target_file_rows,
-                "merge_mode": self.merge_mode,
-                "fold_broadcast_rows": self.fold_broadcast_rows,
-                "compact_after_commit": self.compact_after_commit,
-                "rewrite_probe": self.rewrite_probe,
+                **self._layout_fields(),
                 "summary": {**(extra_summary or {}), "replace_all": True},
                 "parent": m["version"] if m else None,
             }
@@ -2844,179 +2881,65 @@ class SnapshotTable:
             # staged-file reads on the driver for a scattered delta
             from concurrent.futures import ThreadPoolExecutor
 
-            probe_buckets = sorted(staged_by_bucket)
+            probed: dict[tuple, list[tuple] | None] = {}
             with ThreadPoolExecutor(max_workers=16) as ex:
-                probed = dict(
-                    zip(
-                        probe_buckets,
-                        ex.map(
-                            lambda b: self._probe_staged_keys(
-                                staged_by_bucket[b]
-                            ),
-                            probe_buckets,
-                        ),
-                    )
-                )
-            def _hit(files, keys, sref):
-                # File-level pruning: an existing file whose key range can't
-                # contain any delta key is untouched — a scattered-key delta
-                # touches O(delta keys) files, not O(bucket). A SPARSE
-                # per-bucket delta (the steady-state CDC shape) gets exact
-                # per-key containment: its few keys are read driver-side from
-                # the tiny staged file, because the staged file's min/max
-                # ENVELOPE spans the whole domain when keys are scattered and
-                # would defeat range-vs-range pruning. Large per-bucket
-                # deltas fall back to envelope overlap (they touch most files
-                # anyway). Files without stats (legacy manifests) are
-                # conservatively treated as intersecting.
-                if keys is not None:
-                    return [
-                        f for f in files
-                        if _keys_hit_file(keys, f.get("key_stats"),
-                                          self.key_cols)
-                    ]
-                return [
-                    f for f in files
-                    if any(_stats_intersect(f.get("key_stats"),
-                                            s.get("key_stats")) for s in sref)
-                ]
+                for sfiles, keys in zip(
+                    staged_by_bucket.values(),
+                    ex.map(self._probe_staged_keys, staged_by_bucket.values()),
+                ):
+                    probed[tuple(f["path"] for f in sfiles)] = keys
 
-            mor_cap = self.mor_delta_cap
+            def keys_of(files: list[dict]) -> list[tuple] | None:
+                k = tuple(f["path"] for f in files)
+                if k not in probed:
+                    probed[k] = self._probe_staged_keys(files)
+                return probed[k]
+
+            factor = {"cow": math.inf, "mor": 0.0}.get(
+                mode, self.auto_mor_factor
+            )
             mor_delta_raw: list[dict] = []   # staged files -> delta promote
             stale_check: list[dict] = []     # live files defining existing orders
+            # buckets whose live delta files this commit rewrites into base
             folded_buckets: list[int] = []
+            # buckets whose staged rows went to base vs to a MOR delta
             auto_modes: dict[str, int] = {"cow": 0, "mor": 0}
-            # deferred per-bucket rewrite decisions (probe-refined post-loop)
+            # rewrite and promote decisions, refined by one probe post-loop
             pending: list[dict] = []
             files_probe_pruned = 0
             for b, sfiles in sorted(staged_by_bucket.items()):
                 olds = old_by_bucket.get(b, [])
-                base_olds, live_deltas = self._split_kinds(olds)
-                rows_b = sum(f["rows"] for f in olds) + sum(
-                    f["rows"] for f in sfiles
+                action, hit, forced = _plan_bucket(
+                    olds, sfiles, keys_of, factor=factor,
+                    cap=self.mor_delta_cap,
+                    allowance=self._bucket_file_allowance(
+                        sum(f["rows"] for f in olds + sfiles)
+                    ),
+                    key_cols=self.key_cols,
                 )
-                # fragmentation cap (rows-aware: a bucket that NEEDS many
-                # target-size files is not fragmented): compact the bucket
-                frag = (
-                    len(olds) + len(sfiles)
-                    > self._bucket_file_allowance(rows_b)
-                )
-                delta_keys = probed.get(b)
-                eff = mode
-                if mode == "auto":
-                    # Per-bucket COW/MOR choice, decided entirely from
-                    # pre-commit metadata (staged footers + manifest file
-                    # stats — zero extra Spark jobs): MOR when the COW
-                    # rewrite would move auto_mor_factor x more existing
-                    # rows than the delta carries (the scattered-update
-                    # shape where COW's write amplification bites), COW
-                    # when the write is proportionate (bootstrap, backfill,
-                    # clustered burst) or the keys are disjoint (plain
-                    # promote either way, so take the debt-free mode).
-                    # Fragmentation and the per-bucket delta cap fold as in
-                    # the explicit modes.
-                    if frag or not olds:
-                        eff = "cow"
-                    elif len(live_deltas) + len(sfiles) > mor_cap:
-                        eff = "mor"  # cap hit -> the MOR fold cleans the bucket
-                    else:
-                        inter_est = _hit(base_olds, delta_keys, sfiles)
-                        if not inter_est and not live_deltas:
-                            eff = "cow"
-                        else:
-                            staged_rows_b = sum(f["rows"] for f in sfiles)
-                            rewrite_rows = sum(
-                                f["rows"] for f in inter_est
-                            ) + sum(f["rows"] for f in live_deltas)
-                            eff = (
-                                "mor"
-                                if rewrite_rows > self.auto_mor_factor
-                                * max(1, staged_rows_b)
-                                else "cow"
-                            )
-                    auto_modes[eff] += 1
-                if (
-                    eff == "mor"
-                    and not frag
-                    and len(live_deltas) + len(sfiles) <= mor_cap
-                ):
-                    inter = _hit(base_olds, delta_keys, sfiles)
-                    if not inter and not live_deltas:
-                        # disjoint new keys: staged output IS final base —
-                        # rename, no conflicts possible, no fold needed
-                        carried += olds
-                        files_pruned += len(base_olds)
-                        promote_staged += sfiles
-                    else:
-                        # MERGE-ON-READ: base files (even the intersecting
-                        # ones) and live deltas all stay — write amplification
-                        # is O(delta rows). Intersecting files feed the
-                        # write-time stale filter so a late/duplicate delta
-                        # row can never shadow a newer table row.
-                        carried += olds
-                        files_pruned += len(base_olds) - len(inter)
-                        stale_check += inter + live_deltas
-                        mor_delta_raw += sfiles
+                auto_modes["mor" if action == "delta" else "cow"] += 1
+                if action == "delta":
+                    # MERGE-ON-READ: every old file stays; the hit base
+                    # files and live deltas feed the write-time stale
+                    # filter, so a late or duplicate delta row can never
+                    # shadow a newer table row
+                    carried += olds
+                    files_pruned += len(olds) - len(hit) - len(forced)
+                    stale_check += hit + forced
+                    mor_delta_raw += sfiles
                     continue
-                # Each arm below splits its rewrite set into `base_inter`
-                # (stats-matched base files — droppable if an exact key
-                # probe proves no delta key lives in them) and `forced`
-                # (files that must rewrite regardless: live deltas being
-                # folded, or everything under a frag compaction). Decisions
-                # are DEFERRED into `pending` so one post-loop probe job can
-                # refine every bucket at once.
-                if eff == "mor":
-                    # FOLD: the bucket hit its delta cap (or is fragmented) —
-                    # merge its intersecting base files + live deltas + the
-                    # staged delta back into clean base files
+                folding = [f for f in forced if f.get("kind") == "delta"]
+                if folding:
                     folded_buckets.append(b)
-                    if frag:
-                        base_inter: list[dict] = []
-                        forced = base_olds + live_deltas
-                    else:
-                        probe_all = self._probe_staged_keys(
-                            sfiles + live_deltas
-                        )
-                        base_inter = _hit(base_olds, probe_all,
-                                          sfiles + live_deltas)
-                        forced = list(live_deltas)
-                elif frag:
-                    base_inter, forced = [], list(olds)
-                elif live_deltas:
-                    # COW commit on a bucket that carries MOR deltas from
-                    # earlier commits: folding a delta into the rewrite
-                    # requires rewriting EVERY base file containing a delta
-                    # key — probing with only the INCOMING keys can sweep a
-                    # delta into the rewrite (its range overlaps an incoming
-                    # key) while carrying an untouched base file that holds
-                    # the same key, leaving TWO base rows for one key
-                    # (found by the lifecycle fuzz, seed 303). The staged
-                    # files' keys were already probed into probed[b] — only
-                    # the live deltas need a driver-side read here.
-                    if delta_keys is not None:
-                        dkeys = self._probe_staged_keys(live_deltas)
-                        probe_all = (
-                            delta_keys + dkeys if dkeys is not None else None
-                        )
-                    else:
-                        probe_all = None
-                    base_inter = _hit(
-                        base_olds, probe_all, sfiles + live_deltas
-                    )
-                    forced = list(live_deltas)
-                else:
-                    base_inter = _hit(olds, delta_keys, sfiles)
-                    forced = []
                 pending.append({
                     "olds": olds,
                     "sfiles": sfiles,
-                    "base_inter": base_inter,
+                    "base_inter": hit,
                     "forced": forced,
                     # keys that define "file must rewrite": the staged delta
                     # plus any live deltas folding into this rewrite
-                    "keysrc": sfiles + live_deltas,
+                    "keysrc": sfiles + folding,
                 })
-
             # key tuples are bucket-pure (same key -> same bucket), so one
             # global probe refines every bucket safely — a bucket's keys
             # cannot name another bucket's files — and only buckets that
@@ -3158,16 +3081,7 @@ class SnapshotTable:
         manifest = {
             "schema": merged_schema.jsonValue(),
             **spaces,
-            "key_cols": list(self.key_cols),
-            "bucket_cols": list(self.bucket_cols) if self.bucket_cols else None,
-            "order_col": self.order_col,
-            "n_buckets": self.n_buckets,
-            "max_files_per_bucket": self.max_files_per_bucket,
-            "target_file_rows": self.target_file_rows,
-            "merge_mode": self.merge_mode,
-            "fold_broadcast_rows": self.fold_broadcast_rows,
-            "compact_after_commit": self.compact_after_commit,
-            "rewrite_probe": self.rewrite_probe,
+            **self._layout_fields(),
             "summary": extra_summary or {},
             # per-commit write-amplification record (tiny, fixed-size): lets
             # ops tooling (cli status) see a sustained scattered-delta
@@ -3211,7 +3125,7 @@ class SnapshotTable:
             # just built; popped before the dict reaches the caller
             "_manifest": manifest,
             "mode": mode,
-            **({"auto_modes": auto_modes} if mode == "auto" else {}),
+            "auto_modes": auto_modes,
             "delta_files": sum(
                 1 for f in new_files if f.get("kind") == "delta"
             ),

@@ -574,6 +574,33 @@ def test_hintless_small_merge_stages_at_default_parallelism(
     assert [r.content for r in t.read().collect()] == ["y"]
 
 
+def test_cli_delete_stages_at_default_parallelism(spark, tmpdir_path):
+    """`cli delete` builds its one-row key frame so the optimizer can size
+    it: on a 64-bucket table no stage of the delete runs more than
+    defaultParallelism tasks (a frame of Python rows is sized at Spark's
+    Long.MaxValue default and would stage at 4 x n_buckets reducers)."""
+    from etl_spark.cli import main as cli_main
+
+    t = SnapshotTable(spark, f"{tmpdir_path}/t", n_buckets=64)
+    t.merge_epoch(_df(spark, [("r", f"p{i}", "c000000000001", "x")
+                              for i in range(200)]), 0)
+    sc = spark.sparkContext
+    dag = sc._jsc.sc().dagScheduler()
+    first = dag.nextJobId()
+    assert cli_main(["delete", "--table", str(t.root), "--repo", "r",
+                     "--path", "p7", "--commit", "c000000000002",
+                     "--epoch", "1"]) == 0
+    tasks = [
+        sc.statusTracker().getStageInfo(s).numTasks
+        for j in range(first, dag.nextJobId())
+        for s in sc.statusTracker().getJobInfo(j).stageIds
+        if sc.statusTracker().getStageInfo(s) is not None
+    ]
+    assert tasks and max(tasks) <= sc.defaultParallelism < 4 * t.n_buckets
+    got = {r.path for r in SnapshotTable(spark, str(t.root)).read().collect()}
+    assert len(got) == 199 and "p7" not in got
+
+
 def test_tag_file_is_fsynced_before_link(spark, tmpdir_path, monkeypatch):
     """tag() writes its temp file with the write-fsync-link discipline of
     the manifest writers: the content is complete and fsynced before the

@@ -440,16 +440,10 @@ def test_status_recommends_auto_after_scattered_cow_commits(
     assert len(got) == 200 and got["p000"] == "w8" and got["p001"] == "x"
 
 
-def test_new_table_defaults_to_auto_legacy_stays_cow(spark, tmpdir_path):
+def test_new_table_defaults_to_auto(spark, tmpdir_path):
     """VERDICT r4 #2: merge_mode defaults to "auto" for NEW tables (round-4
-    bench: auto matches best-of-both per delta shape). Migration rule:
-    existing tables keep their persisted policy; a PRE-policy manifest
-    (no merge_mode key) stays on the "cow" default it was written under."""
-    import json
-    from pathlib import Path
-
-    from etl_spark.lake.table import MANIFEST_DIR
-
+    bench: auto matches best-of-both per delta shape). Existing tables
+    keep their persisted policy; an explicit constructor value wins."""
     t = SnapshotTable(spark, f"{tmpdir_path}/new", n_buckets=2)
     assert t.merge_mode == "auto"
     t.merge_epoch(_df(spark, [("r", "a", "c000000000001", "v1")]), 0)
@@ -459,16 +453,6 @@ def test_new_table_defaults_to_auto_legacy_stays_cow(spark, tmpdir_path):
     assert SnapshotTable(
         spark, f"{tmpdir_path}/new", merge_mode="mor"
     ).merge_mode == "mor"
-
-    # simulate a pre-policy legacy table: strip merge_mode from the manifest
-    leg = SnapshotTable(spark, f"{tmpdir_path}/leg", n_buckets=2,
-                        merge_mode="cow")
-    leg.merge_epoch(_df(spark, [("r", "a", "c000000000001", "v1")]), 0)
-    mpath = sorted((Path(f"{tmpdir_path}/leg") / MANIFEST_DIR).glob("v*.json"))[-1]
-    m = json.loads(mpath.read_text())
-    del m["merge_mode"]
-    mpath.write_text(json.dumps(m))
-    assert SnapshotTable(spark, f"{tmpdir_path}/leg").merge_mode == "cow"
 
 
 def test_compact_after_commit_auto_folds_debt(spark, tmpdir_path):
@@ -533,13 +517,7 @@ def test_compact_after_commit_auto_folds_debt(spark, tmpdir_path):
 def test_live_delta_rows_o_groups_on_grouped_manifest(spark, tmpdir_path):
     """The debt probes (row debt AND worst-bucket delta-file count) read
     the group refs' rollups, not the group files, once a manifest goes
-    grouped — and a legacy ref without the rollups is still summed
-    correctly via a one-time group load."""
-    import json
-    from pathlib import Path
-
-    from etl_spark.lake.table import MANIFEST_DIR
-
+    grouped."""
     t = SnapshotTable(spark, tmpdir_path, n_buckets=4, merge_mode="mor",
                       manifest_inline_files=2, manifest_groups=2)
     t.merge_epoch(
@@ -563,27 +541,16 @@ def test_live_delta_rows_o_groups_on_grouped_manifest(spark, tmpdir_path):
             per_bucket[f["bucket"]] = per_bucket.get(f["bucket"], 0) + 1
     want_max = max(per_bucket.values())
     assert t.max_bucket_delta_files() == want_max
-    # strip the rollups (pre-rollup legacy group refs) -> same answers
-    mpath = sorted((Path(str(tmpdir_path)) / MANIFEST_DIR).glob("v*.json"))[-1]
-    mm = json.loads(mpath.read_text())
-    for g in mm["file_groups"]:
-        g.pop("delta_rows", None)
-        g.pop("delta_files_by_bucket", None)
-    mpath.write_text(json.dumps(mm))
-    legacy = SnapshotTable(spark, tmpdir_path)
-    assert legacy.live_delta_rows() == want
-    assert legacy.max_bucket_delta_files() == want_max
-    # ... and that one-time load is memoized per Table instance: a second
-    # advice call must not re-read any group file (the hot path —
-    # compact_after_commit="auto" calls compaction_advice after EVERY
-    # commit, and legacy refs are never rewritten by commits that don't
-    # touch their groups)
+    # the hot path — compact_after_commit="auto" calls compaction_advice
+    # after EVERY commit — must not read any group file
+    fresh = SnapshotTable(spark, tmpdir_path)
     loads = []
     orig = SnapshotTable._load_group
-    legacy._load_group = (  # type: ignore[method-assign]
-        lambda ref: loads.append(ref["path"]) or orig(legacy, ref)
+    fresh._load_group = (  # type: ignore[method-assign]
+        lambda ref: loads.append(ref["path"]) or orig(fresh, ref)
     )
-    assert legacy.live_delta_rows() == want
+    assert fresh.live_delta_rows() == want
+    assert fresh.max_bucket_delta_files() == want_max
     assert loads == []
 
 

@@ -105,6 +105,31 @@ def test_publish_crash_idempotence(spark, tmpdir_path):
     assert t.applied_epochs() == {0, 1}
 
 
+def test_publish_crash_idempotence_after_a_later_commit(spark, tmpdir_path):
+    """The crash window again, but another commit lands before the re-run:
+    the publish is no longer the head snapshot, and the re-run must still
+    find it among the retained snapshots instead of raising
+    StalePublishError for a commit that is already live."""
+    t = _tbl(spark, tmpdir_path)
+    t.merge_epoch(_df(spark, [("r", "a", "c1", "v1")]), 0)
+    t.merge_epochs(_df(spark, [("r", "b", "c1", "w1")]), [1], stage_as="x")
+    sf = Path(tmpdir_path) / MANIFEST_DIR / "staged-x.json"
+    saved = sf.read_bytes()
+    v = t.publish_staged("x")["version"]
+    sf.write_bytes(saved)  # simulate the crash window
+    t.merge_epoch(_df(spark, [("r", "c", "c1", "x1")]), 2)
+    assert t.current_version() == v + 1
+    again = t.publish_staged("x")
+    assert again["already_published"] and again["version"] == v
+    assert not sf.exists()
+    assert t.applied_epochs() == {0, 1, 2}
+    # a ref that was never published still fails as stale
+    t.merge_epochs(_df(spark, [("r", "d", "c1", "y1")]), [3], stage_as="y")
+    t.merge_epoch(_df(spark, [("r", "e", "c1", "z1")]), 4)
+    with pytest.raises(StalePublishError):
+        t.publish_staged("y")
+
+
 def test_pipeline_stage_replay_and_healers(spark, tmpdir_path):
     """replay(stage_as=...) on a fresh table: nothing is published until
     publish_staged; afterwards the next replay heals lineage and is a no-op
