@@ -48,7 +48,10 @@ from etl_spark.operators.dedupe import (
 )
 from etl_spark.sources.segments import Segment, pending_segments
 
-COMMIT_RE = r"^c\d{12}$"
+# ``\z``, not ``$``: Java's ``$`` (Spark's ``rlike``) also matches before a
+# final line terminator, so ``"c000000000001\n"`` would pass and, sorting
+# after the clean LSN, win latest-wins over it
+COMMIT_RE = r"^c\d{12}\z"
 
 
 def clean_events(raw: DataFrame) -> DataFrame:

@@ -172,3 +172,48 @@ def test_events_read_from_footers_equals_raw_count(replayed, stream):
         pipe.spark.conf.set(
             "spark.sql.files.maxPartitionBytes", pipe._prev_split or "128m"
         )
+
+
+def _write_segment(root: Path, epoch: int, rows: list[tuple]) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = root / f"epoch={epoch}"
+    d.mkdir(parents=True)
+    pq.write_table(
+        pa.table(list(zip(*rows)), names=["repo", "path", "commit", "lang",
+                                          "content"]),
+        d / "part-0.parquet",
+    )
+
+
+@pytest.mark.parametrize("suffix", ["\n", "\r\n"])
+def test_commit_with_trailing_line_terminator_is_dropped(
+    spark, tmpdir_path, suffix
+):
+    """A re-delivery whose LSN carries a trailing line terminator sorts
+    after the clean LSN; if the commit pattern accepted it (Java's ``$``
+    matches before a final terminator) it would win latest-wins and the
+    table would store the malformed LSN."""
+    from etl_spark.pipeline import clean_events
+
+    df = spark.createDataFrame(
+        [("r", "p", "c000000000001", "py", "x"),
+         ("r", "p", "c000000000001" + suffix, "py", "x")],
+        "repo string, path string, commit string, lang string, "
+        "content string",
+    )
+    assert [r.commit for r in clean_events(df).collect()] == [
+        "c000000000001"
+    ]
+    stream = Path(tmpdir_path) / "stream"
+    _write_segment(stream, 0, [("r", "p", "c000000000001", "py", "clean")])
+    _write_segment(stream, 1, [("r", "p", "c000000000001" + suffix, "py",
+                                "bad")])
+    pipe = IngestPipeline(spark, f"{tmpdir_path}/table", n_buckets=2)
+    pipe.replay(str(stream))
+    rows = pipe.table.read().collect()
+    assert [(r.commit, r.content) for r in rows] == [
+        ("c000000000001", "clean")
+    ]
+    assert pipe.table.applied_epochs() == {0, 1}
