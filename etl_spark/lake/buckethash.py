@@ -157,3 +157,121 @@ def xxhash64(values, types) -> int:
 def bucket_of(values, types, n_buckets: int) -> int:
     """``pmod(xxhash64(values...), n_buckets)`` — the writer's bucket."""
     return xxhash64(values, types) % n_buckets
+
+
+# ---- vectorized: one bucket per row of Arrow columns -------------------------
+
+def _np_consts():
+    import numpy as np
+
+    return [np.uint64(c) for c in (_P1, _P2, _P3, _P4, _P5)]
+
+
+def _xxh64_rows(data, seeds):
+    """XXH64 of each row of ``data`` (a 2-D uint8 array: every row the same
+    length) under its own seed: :func:`xxh64` over numpy uint64 lanes."""
+    import numpy as np
+
+    p1, p2, p3, p4, p5 = _np_consts()
+
+    def rotl(x, r):
+        return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
+
+    def rnd(acc, lane):
+        return rotl(acc + lane * p2, 31) * p1
+
+    def lanes(i, width):
+        return np.ascontiguousarray(data[:, i:i + width]).view("<u8")
+
+    n = data.shape[1]
+    i = 0
+    with np.errstate(over="ignore"):
+        if n >= 32:
+            v = [seeds + p1 + p2, seeds + p2, seeds.copy(), seeds - p1]
+            while i + 32 <= n:
+                stripe = lanes(i, 32)
+                v = [rnd(a, stripe[:, j]) for j, a in enumerate(v)]
+                i += 32
+            h = rotl(v[0], 1) + rotl(v[1], 7) + rotl(v[2], 12) + rotl(v[3], 18)
+            for a in v:
+                h = (h ^ rnd(np.uint64(0), a)) * p1 + p4
+        else:
+            h = seeds + p5
+        h = h + np.uint64(n)
+        while i + 8 <= n:
+            h ^= rnd(np.uint64(0), lanes(i, 8)[:, 0])
+            h = rotl(h, 27) * p1 + p4
+            i += 8
+        if i + 4 <= n:
+            word = np.ascontiguousarray(data[:, i:i + 4]).view("<u4")[:, 0]
+            h ^= word.astype(np.uint64) * p1
+            h = rotl(h, 23) * p2 + p3
+            i += 4
+        for j in range(i, n):
+            h ^= data[:, j].astype(np.uint64) * p5
+            h = rotl(h, 11) * p1
+        h = (h ^ (h >> np.uint64(33))) * p2
+        h = (h ^ (h >> np.uint64(29))) * p3
+        return h ^ (h >> np.uint64(32))
+
+
+# column types the vectorized hash encodes, with the width of their
+# little-endian encoding (None: variable, the value's bytes)
+_ROW_WIDTHS = {
+    T.StringType: None, T.BinaryType: None, T.BooleanType: 4,
+    T.ByteType: 4, T.ShortType: 4, T.IntegerType: 4, T.DateType: 4,
+    T.LongType: 8,
+}
+
+
+def rows_hashable(dtype: T.DataType) -> bool:
+    """True if :func:`bucket_rows` can place rows by a ``dtype`` column."""
+    return type(dtype) in _ROW_WIDTHS
+
+
+def bucket_rows(columns, types, n_buckets: int):
+    """``pmod(xxhash64(cols...), n_buckets)`` for every row of the Arrow
+    ``columns`` (arrays or chunked arrays of equal length), as an int32
+    numpy array — the bucket Spark's writer gives each row. Nulls are
+    skipped; a row whose placement values are all null hashes the seed."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = len(columns[0]) if columns else 0
+    h = np.full(n, SEED, dtype=np.uint64)
+    for col, dtype in zip(columns, types):
+        width = _ROW_WIDTHS[type(dtype)]
+        if isinstance(col, pa.ChunkedArray):
+            col = col.combine_chunks()
+        valid = (
+            np.ones(n, dtype=bool) if col.null_count == 0
+            else col.is_valid().to_numpy(zero_copy_only=False)
+        )
+        if width is not None:
+            if isinstance(dtype, T.BooleanType):
+                col = col.cast(pa.int32())
+            elif isinstance(dtype, T.DateType):
+                col = col.view(pa.int32())
+            vals = pc.fill_null(col, 0).to_numpy(zero_copy_only=False)
+            raw = vals.astype("<i4" if width == 4 else "<i8").view(np.uint8)
+            data = raw.reshape(n, width)[valid]
+            h[valid] = _xxh64_rows(data, h[valid])
+            continue
+        if pa.types.is_large_string(col.type) or pa.types.is_large_binary(
+            col.type
+        ):
+            col = col.cast(pa.binary() if isinstance(dtype, T.BinaryType)
+                           else pa.string())
+        _, offs_buf, data_buf = col.buffers()
+        offs = np.frombuffer(offs_buf, dtype=np.int32)[
+            col.offset:col.offset + n + 1
+        ]
+        blob = (np.frombuffer(data_buf, dtype=np.uint8)
+                if data_buf is not None else np.zeros(0, dtype=np.uint8))
+        lens = np.diff(offs)
+        for length in np.unique(lens[valid]):
+            idx = np.flatnonzero(valid & (lens == length))
+            data = blob[offs[idx][:, None] + np.arange(length)]
+            h[idx] = _xxh64_rows(data.reshape(len(idx), length), h[idx])
+    return np.mod(h.view(np.int64), n_buckets).astype(np.int32)

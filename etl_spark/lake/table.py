@@ -51,9 +51,9 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
-from etl_spark.lake import buckethash
+from etl_spark.lake import arrow_exec, buckethash
 
 MANIFEST_DIR = "_meta"
 DATA_DIR = "data"
@@ -212,26 +212,11 @@ def _plan_bytes(df: DataFrame) -> int:
     return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
-def _align(tbl: pa.Table, target: pa.Schema) -> pa.Table:
-    """``tbl`` in ``target``'s column order and types, as Spark reads a
-    file under the manifest schema: a column the file predates reads as
-    nulls and a narrower type widens (Spark's INT96 timestamps, read as
-    naive nanoseconds, become the schema's UTC microseconds)."""
-    return pa.Table.from_arrays(
-        [
-            tbl.column(f.name).cast(f.type) if f.name in tbl.column_names
-            else pa.nulls(tbl.num_rows, f.type)
-            for f in target
-        ],
-        schema=target,
-    )
-
-
 def _read_key_rows(path: str, key: dict, target: pa.Schema) -> pa.Table:
     """Rows of one parquet file whose key columns equal ``key`` (null-safe),
-    aligned to ``target`` (:func:`_align`). Each key value is cast to the
-    column's type IN THE FILE, so the filter compares like with like and
-    row-group stats prune."""
+    aligned to ``target`` (:func:`arrow_exec.align`). Each key value is
+    cast to the column's type IN THE FILE, so the filter compares like
+    with like and row-group stats prune."""
     data = ds.dataset(path, format="parquet")
     cond = None
     for c, v in key.items():
@@ -242,16 +227,17 @@ def _read_key_rows(path: str, key: dict, target: pa.Schema) -> pa.Table:
                 data.schema.field(c).type
             )
         cond = eq if cond is None else cond & eq
-    return _align(data.to_table(filter=cond), target)
+    return arrow_exec.align(data.to_table(filter=cond), target)
 
 
 def _read_aligned(
     path: str, target: pa.Schema, lead: pa.Array | None = None
 ) -> pa.Table:
-    """``target``'s columns of one parquet file, aligned (:func:`_align`).
-    With ``lead``, only rows whose first ``target`` column is in ``lead``
-    (nulls included when ``lead`` holds one) are read; the values are cast
-    to the column's type IN THE FILE so row-group stats prune."""
+    """``target``'s columns of one parquet file, aligned
+    (:func:`arrow_exec.align`). With ``lead``, only rows whose first
+    ``target`` column is in ``lead`` (nulls included when ``lead`` holds
+    one) are read; the values are cast to the column's type IN THE FILE
+    so row-group stats prune."""
     data = ds.dataset(path, format="parquet")
     cond = None
     if lead is not None:
@@ -265,7 +251,7 @@ def _read_aligned(
         columns=[c for c in target.names if c in data.schema.names],
         filter=cond,
     )
-    return _align(tbl, target)
+    return arrow_exec.align(tbl, target)
 
 
 def _stats_intersect(a: dict | None, b: dict | None) -> bool:
@@ -1552,11 +1538,20 @@ class SnapshotTable:
         rollback_to_snapshot): commits a NEW version whose file list, schema
         and applied-epoch spaces are those of ``version``. History is
         preserved — the bad snapshots stay readable until expired — and the
-        target's files are still referenced, so vacuum keeps them."""
+        target's files are still referenced, so vacuum keeps them.
+
+        Every manifest carries ``rollbacks``, the number of rollbacks in
+        the table's history: a rollback counts one more than the snapshot
+        it replaces, and every other commit carries the count forward. A
+        consumer that compares it across two snapshots sees a rollback
+        between them even after the ``rollback_of`` snapshot expired."""
         m = self.manifest(version)  # raises if the snapshot is gone
         cur = self.current_version()
         new = {k: v for k, v in m.items() if k != "commit_stats"}
-        new.update({"summary": {"rollback_of": version}, "parent": cur})
+        new.update({
+            "summary": {"rollback_of": version}, "parent": cur,
+            "rollbacks": (self.manifest(cur) or {}).get("rollbacks", 0) + 1,
+        })
         v = self._commit_manifest(new, base_version=cur)
         # the restored snapshot carries ITS layout (a rollback across a
         # rebucket restores the old bucket count) — re-adopt it so this
@@ -2020,6 +2015,7 @@ class SnapshotTable:
                 **self._layout_fields(),
                 "summary": {**(extra_summary or {}), "replace_all": True},
                 "parent": m["version"] if m else None,
+                "rollbacks": (m or {}).get("rollbacks", 0),
             }
             self._attach_files(manifest, new_files)
             try:
@@ -2144,20 +2140,25 @@ class SnapshotTable:
     # pre-probe from footers (staged rows) and the manifest (file count).
     rewrite_probe_keys_per_file = 2.0
 
-    def _probe_staged_keys(self, sfiles: list[dict]) -> list[tuple] | None:
+    def _probe_staged_keys(
+        self, sfiles: list[dict], rows: dict[str, pa.Table] | None = None
+    ) -> list[tuple] | None:
         """Key tuples of a SPARSE staged delta (None if too large to probe).
 
         Reading a few KB of key columns from one or two bucket-pure staged
         files is a driver-side pyarrow read — no Spark job — and buys exact
         file pruning for the steady-state CDC case where an epoch touches a
-        handful of keys per bucket.
+        handful of keys per bucket. Files whose rows the commit holds in
+        memory (``rows``, by path: an Arrow-staged commit) are not read.
         """
         if sum(f["rows"] for f in sfiles) > self.key_probe_limit:
             return None
         keys: list[tuple] = []
         for f in sfiles:
+            tbl = (rows or {}).get(f["path"])
             try:
-                tbl = pq.read_table(f["path"], columns=list(self.key_cols))
+                if tbl is None:
+                    tbl = pq.read_table(f["path"], columns=list(self.key_cols))
             except Exception:
                 return None
             cols = [tbl.column(c).to_pylist() for c in self.key_cols]
@@ -2165,21 +2166,24 @@ class SnapshotTable:
         return keys
 
     def _arrow_fresh_rows(
-        self, staged: list[dict], live: list[dict], schema: T.StructType
-    ) -> int | None:
+        self, staged: list[dict], live: list[dict], schema: T.StructType,
+        rows: dict[str, pa.Table] | None = None,
+    ) -> pa.Array | None:
         """The write-time stale filter's verdict on the driver, with no
-        Spark job: how many rows of the ``staged`` files strictly beat the
-        newest non-null ``order_col`` of their key in the ``live`` files.
-        None when a key or order type compares differently in Python than
-        in Spark (:data:`_PY_ORDERED_TYPES`); the caller then runs the
-        Spark filter.
+        Spark job: a boolean mask over the rows of the ``staged`` files,
+        in order, true where a row strictly beats the newest non-null
+        ``order_col`` of its key in the ``live`` files. None when a key or
+        order type compares differently in Python than in Spark
+        (:data:`_PY_ORDERED_TYPES`); the caller then runs the Spark
+        filter.
 
         Only the key and order columns are read, on a thread pool, and
         each live file only where its first key column holds a staged
-        value, so row-group stats prune. Keys match null-safely (a
-        ``None`` in a tuple equals ``None``), as ``eqNullSafe`` does; a
-        staged row with a null order, or an order equal to the newest,
-        is stale."""
+        value, so row-group stats prune; staged files whose rows the
+        commit holds in memory (``rows``, by path) are not read. Keys
+        match null-safely (a ``None`` in a tuple equals ``None``), as
+        ``eqNullSafe`` does; a staged row with a null order, or an order
+        equal to the newest, is stale."""
         from concurrent.futures import ThreadPoolExecutor
 
         by_name = {f.name: f for f in schema.fields}
@@ -2189,10 +2193,17 @@ class SnapshotTable:
         ):
             return None
         target = to_arrow_schema(T.StructType([by_name[c] for c in cols]))
+        rows = rows or {}
+
+        def staged_rows(f):
+            if f["path"] in rows:
+                return arrow_exec.align(rows[f["path"]].select(cols), target)
+            return _read_aligned(f["path"], target)
+
         with ThreadPoolExecutor(max_workers=16) as ex:
-            new = pa.concat_tables([target.empty_table(), *ex.map(
-                lambda f: _read_aligned(f["path"], target), staged
-            )])
+            new = pa.concat_tables(
+                [target.empty_table(), *ex.map(staged_rows, staged)]
+            )
             lead = new.column(0).combine_chunks().unique()
             old = pa.concat_tables([target.empty_table(), *ex.map(
                 lambda f: _read_aligned(f["path"], target, lead), live
@@ -2208,12 +2219,11 @@ class SnapshotTable:
             zip(*[newest.column(c).to_pylist() for c in self.key_cols]),
             newest.column(f"{self.order_col}_max").to_pylist(),
         ))
-        kept = 0
+        fresh = []
         for *key, order in zip(*[new.column(c).to_pylist() for c in cols]):
             top = latest.get(tuple(key))
-            if top is None or (order is not None and order > top):
-                kept += 1
-        return kept
+            fresh.append(top is None or (order is not None and order > top))
+        return pa.array(fresh, pa.bool_())
 
     def _stale_filter_spark(
         self, staged: list[dict], live: list[dict],
@@ -2635,7 +2645,7 @@ class SnapshotTable:
 
     def merge_epochs(
         self,
-        updates: DataFrame,
+        updates: DataFrame | pa.Table,
         epoch_ids: list[int],
         *,
         extra_summary: dict[str, Any] | None = None,
@@ -2648,6 +2658,13 @@ class SnapshotTable:
         stage_as: str | None = None,
     ) -> dict[str, Any]:
         """Idempotent keyed upsert of one or more epochs in a single commit.
+
+        ``updates`` is a DataFrame or a ``pyarrow.Table``. A table is
+        deduped and staged on the driver by the Arrow writer
+        (:func:`arrow_exec.stage`, no Spark job) when its column types
+        allow (:func:`arrow_exec.writable`), and wrapped as a DataFrame
+        otherwise; the commit after staging is the same either way. The
+        pipeline's Arrow ingest tier commits through this path.
 
         ``stage_as``: write-audit-publish. The merge runs in full — data
         files land in data/, the manifest is built — but instead of
@@ -2688,15 +2705,26 @@ class SnapshotTable:
         applied the same epochs turns the retry into a skip; files written by
         the losing attempt become orphans for ``vacuum``.
         """
-        if size_hint is None:
-            size_hint = _plan_bytes(updates)
-        if not assume_deduped and "_bucket" not in updates.columns:
-            # Safe-by-default: the invariant "one row per key per file, key
-            # sets disjoint across a bucket's files" is what makes file-level
-            # COW correct — enforce it here unless the caller's plan already
-            # guarantees it. The fused arranged plan dedupes and bucket-
-            # arranges in the same single shuffle the staging write needs.
-            updates = self.arranged_updates(updates, size_bytes=size_hint)
+        if isinstance(updates, pa.Table):
+            if not arrow_exec.writable(
+                from_arrow_schema(updates.schema), self.placement_cols
+            ):
+                updates = self.spark.createDataFrame(updates)
+            elif not assume_deduped:
+                updates = arrow_exec.latest_per_key(
+                    updates, self.key_cols, self.order_col
+                )
+        if isinstance(updates, DataFrame):
+            if size_hint is None:
+                size_hint = _plan_bytes(updates)
+            if not assume_deduped and "_bucket" not in updates.columns:
+                # Safe-by-default: the invariant "one row per key per file,
+                # key sets disjoint across a bucket's files" is what makes
+                # file-level COW correct — enforce it here unless the
+                # caller's plan already guarantees it. The fused arranged
+                # plan dedupes and bucket-arranges in the same single
+                # shuffle the staging write needs.
+                updates = self.arranged_updates(updates, size_bytes=size_hint)
         if stage_as is not None:
             # validate the name AND fail a taken ref in milliseconds, before
             # the merge runs: without this, a re-run after a staged-but-
@@ -2771,7 +2799,7 @@ class SnapshotTable:
 
     def _merge_epochs_once(
         self,
-        updates: DataFrame,
+        updates: DataFrame | pa.Table,
         epoch_ids: list[int],
         extra_summary: dict[str, Any] | None,
         epoch_space: str,
@@ -2801,16 +2829,28 @@ class SnapshotTable:
         new_ids = [e for e in epoch_ids if e not in applied]
         if not new_ids:
             return {"skipped": True, "epochs": sorted(epoch_ids)}
-        if stamp_epoch and "epoch" in updates.columns:
+        # rows already on the driver are staged by the Arrow writer, which
+        # keeps each staged file's rows for the key probes and stale filter
+        in_memory = isinstance(updates, pa.Table)
+        columns = updates.column_names if in_memory else updates.columns
+        if stamp_epoch and "epoch" in columns:
             # provenance stamp resolved from THIS snapshot's applied set —
             # always an epoch this commit applies, so changes_between's
             # new-epoch ranges are guaranteed to cover the row
-            updates = updates.withColumn(
-                "epoch",
-                F.lit(int(new_ids[-1])).cast(
-                    updates.schema["epoch"].dataType
-                ),
-            )
+            if in_memory:
+                i = columns.index("epoch")
+                updates = updates.set_column(
+                    i, updates.schema.field(i),
+                    pa.array([int(new_ids[-1])] * updates.num_rows,
+                             updates.schema.field(i).type),
+                )
+            else:
+                updates = updates.withColumn(
+                    "epoch",
+                    F.lit(int(new_ids[-1])).cast(
+                        updates.schema["epoch"].dataType
+                    ),
+                )
 
         # Every commit-id space from the current snapshot carries over; only
         # this merge's own space gains epochs.
@@ -2820,10 +2860,13 @@ class SnapshotTable:
             applied | set(new_ids)
         )
 
-        arranged = "_bucket" in updates.columns
-        data_schema = (
-            updates.drop("_bucket").schema if arranged else updates.schema
-        )
+        arranged = not in_memory and "_bucket" in columns
+        if in_memory:
+            data_schema = from_arrow_schema(updates.schema)
+        elif arranged:
+            data_schema = updates.drop("_bucket").schema
+        else:
+            data_schema = updates.schema
         if m is not None:
             old_schema = T.StructType.fromJson(m["schema"])
             merged_schema = _merge_schemas(
@@ -2838,9 +2881,16 @@ class SnapshotTable:
         import shutil
         from collections import defaultdict
 
-        staging, staged = self._stage_bucketed(
-            updates, arranged=arranged, size_bytes=size_hint
-        )
+        staged_rows: dict[str, pa.Table] | None = None
+        if in_memory:
+            staged_rows = {}
+            staging, staged = arrow_exec.stage(
+                self, updates, data_schema, rows=staged_rows
+            )
+        else:
+            staging, staged = self._stage_bucketed(
+                updates, arranged=arranged, size_bytes=size_hint
+            )
         try:
             staged_by_bucket: dict[int, list] = defaultdict(list)
             for f in staged:
@@ -2876,23 +2926,30 @@ class SnapshotTable:
             for b, olds in old_by_bucket.items():
                 if b not in staged_by_bucket:
                     carried += olds
-            # pre-read all sparse-delta key probes on a thread pool: the
+            # pre-read the sparse-delta key probes on a thread pool: the
             # per-bucket loop would otherwise serialize hundreds of tiny
-            # staged-file reads on the driver for a scattered delta
+            # staged-file reads on the driver for a scattered delta. Only
+            # buckets with live files ask for keys (_plan_bucket promotes
+            # into an empty bucket first), and an Arrow-staged commit
+            # answers from memory
             from concurrent.futures import ThreadPoolExecutor
 
             probed: dict[tuple, list[tuple] | None] = {}
-            with ThreadPoolExecutor(max_workers=16) as ex:
-                for sfiles, keys in zip(
-                    staged_by_bucket.values(),
-                    ex.map(self._probe_staged_keys, staged_by_bucket.values()),
-                ):
-                    probed[tuple(f["path"] for f in sfiles)] = keys
+            to_probe = [
+                sfiles for b, sfiles in staged_by_bucket.items()
+                if old_by_bucket.get(b)
+            ]
+            if staged_rows is None and to_probe:
+                with ThreadPoolExecutor(max_workers=16) as ex:
+                    for sfiles, keys in zip(
+                        to_probe, ex.map(self._probe_staged_keys, to_probe)
+                    ):
+                        probed[tuple(f["path"] for f in sfiles)] = keys
 
             def keys_of(files: list[dict]) -> list[tuple] | None:
                 k = tuple(f["path"] for f in files)
                 if k not in probed:
-                    probed[k] = self._probe_staged_keys(files)
+                    probed[k] = self._probe_staged_keys(files, staged_rows)
                 return probed[k]
 
             factor = {"cow": math.inf, "mor": 0.0}.get(
@@ -3010,27 +3067,43 @@ class SnapshotTable:
                 # staged rows (as in _probe_staged_keys) and
                 # fold_broadcast_rows live rows (the broadcast guard). The
                 # verdict is all-fresh (promote) or all-stale (metadata-only
-                # commit) in the common case; only a mix (a cross-epoch late
-                # re-delivery) needs a filtered copy written, and that, like
-                # any larger delta, runs on Spark.
+                # commit) in the common case; a mix (a cross-epoch late
+                # re-delivery) writes a filtered copy of the fresh rows with
+                # the Arrow writer. A larger delta runs on Spark.
                 seq = (m["version"] + 1) if m else 1
                 n_staged = sum(f["rows"] for f in mor_delta_raw)
-                n_kept = None
+                fresh = None
                 if (
                     n_staged <= self.key_probe_limit
                     and sum(f["rows"] for f in stale_check)
                     <= self.fold_broadcast_rows
                 ):
-                    n_kept = self._arrow_fresh_rows(
-                        mor_delta_raw, stale_check, merged_schema
+                    fresh = self._arrow_fresh_rows(
+                        mor_delta_raw, stale_check, merged_schema,
+                        staged_rows,
                     )
-                if n_kept is None or 0 < n_kept < n_staged:
-                    kept = self._stale_filter_spark(
-                        mor_delta_raw, stale_check, data_schema,
-                        merged_schema,
-                    )
-                    if n_kept is None:
-                        n_kept = kept.count()
+                n_kept = None if fresh is None else pc.sum(fresh).as_py() or 0
+                kept: DataFrame | pa.Table | None = None
+                if fresh is None or 0 < n_kept < n_staged:
+                    if fresh is not None and arrow_exec.writable(
+                        data_schema, self.placement_cols
+                    ):
+                        target = to_arrow_schema(data_schema)
+                        kept = pa.concat_tables([
+                            arrow_exec.align(
+                                staged_rows[f["path"]] if staged_rows
+                                else pq.read_table(f["path"]),
+                                target,
+                            )
+                            for f in mor_delta_raw
+                        ]).filter(fresh)
+                    else:
+                        kept = self._stale_filter_spark(
+                            mor_delta_raw, stale_check, data_schema,
+                            merged_schema,
+                        )
+                        if n_kept is None:
+                            n_kept = kept.count()
                 stale_dropped = n_staged - n_kept
                 if n_kept == n_staged:
                     # the common CDC case (every delta row is fresh): the
@@ -3040,12 +3113,17 @@ class SnapshotTable:
                         for p in self._promote_all(mor_delta_raw)
                     ]
                 elif n_kept > 0:
-                    staging3, staged3 = self._stage_bucketed(
-                        kept,
-                        size_bytes=sum(
-                            f.get("bytes") or 0 for f in mor_delta_raw
-                        ),
-                    )
+                    if isinstance(kept, pa.Table):
+                        staging3, staged3 = arrow_exec.stage(
+                            self, kept, data_schema
+                        )
+                    else:
+                        staging3, staged3 = self._stage_bucketed(
+                            kept,
+                            size_bytes=sum(
+                                f.get("bytes") or 0 for f in mor_delta_raw
+                            ),
+                        )
                     try:
                         new_files += [
                             {**p, "kind": "delta", "seq": seq}
@@ -3100,6 +3178,7 @@ class SnapshotTable:
                 ),
             },
             "parent": m["version"] if m else None,
+            "rollbacks": (m or {}).get("rollbacks", 0),
         }
         self._attach_files(
             manifest, carried + new_files,

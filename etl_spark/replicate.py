@@ -30,9 +30,10 @@ SURVEY §3.3) to cross-table replication:
   re-issue a key under the same order value with different content, and a
   purged key must simply vanish — both beyond what latest-wins
   arbitration can express. A rollback whose marker expired before the
-  next sync poll and whose re-replay re-applied the same epoch ids is
-  healed only by the shrink check; the operational rule: poll at least
-  as often as snapshot retention.
+  next sync poll, followed by a re-replay of the same epoch ids, is still
+  seen: every source manifest carries a monotone ``rollbacks`` count, and
+  a count at the head above the one at the last synced version means a
+  rollback landed in between.
 
 Scale: the incremental path moves exactly the feed (one arranged shuffle on
 the destination's key space); the resync path is one full source read — the
@@ -90,16 +91,12 @@ class Mirror:
         m_to = self.src.manifest(v_to)
         if _all_applied_epochs(m_from) - _all_applied_epochs(m_to):
             return "applied_set_shrank"  # rolled back, not (fully) re-applied
-        for v in range(v_from + 1, v_to + 1):
-            try:
-                s = (self.src.manifest(v) or {}).get("summary") or {}
-            except FileNotFoundError:
-                continue  # expired intermediate: endpoint checks only
-            if "rollback_of" in s:
-                # a rollback + re-replay can re-apply the SAME epoch ids
-                # with DIFFERENT rows (the fix-and-replay pattern); the
-                # feed's epoch filter would hide the fix
-                return "rollback_in_window"
+        if m_to.get("rollbacks", 0) != m_from.get("rollbacks", 0):
+            # a rollback + re-replay can re-apply the SAME epoch ids with
+            # DIFFERENT rows (the fix-and-replay pattern); the feed's epoch
+            # filter would hide the fix. The count sees the rollback even
+            # when its rollback_of snapshot expired before this poll.
+            return "rollback_in_window"
         return None
 
     def _full_resync(self, v_to: int, epoch_ids: list[int],

@@ -85,6 +85,8 @@ def test_fused_strategy_matches_maxby_replay(spark, tmpdir_path):
                            dedupe_strategy="fused")
     maxby = IngestPipeline(spark, f"{tmpdir_path}/m", n_buckets=4,
                            dedupe_strategy="maxby")
+    # the strategies are Spark plans: keep both off the Arrow ingest tier
+    fused.arrow_tier_bytes = maxby.arrow_tier_bytes = 0
     fused.replay(stream)  # incremental: exercises fresh-bucket AND rewrite merges
     maxby.replay(stream)
     cf = sorted(map(tuple, fused.table.read().collect()))
@@ -103,6 +105,7 @@ def test_auto_pipeline_replay(spark, tmpdir_path):
     write_segments(df, stream)
     auto = IngestPipeline(spark, f"{tmpdir_path}/a", n_buckets=4, dedupe_strategy="auto")
     fixed = IngestPipeline(spark, f"{tmpdir_path}/b", n_buckets=4)
+    auto.arrow_tier_bytes = 0  # the skew probe runs on the Spark tier
     auto.replay(stream, mode="catchup")
     fixed.replay(stream, mode="catchup")
     ca = sorted(map(tuple, auto.table.read().drop("epoch").collect()))

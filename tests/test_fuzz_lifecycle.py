@@ -25,6 +25,7 @@ from __future__ import annotations
 import os
 import random
 
+import pyarrow as pa
 import pytest
 
 from etl_spark.lake.table import SnapshotTable
@@ -63,6 +64,16 @@ _STEPS = int(os.environ.get("FUZZ_STEPS", "24"))
 
 @pytest.mark.parametrize("seed", _SEEDS)
 def test_lifecycle_fuzz_matches_model(spark, tmpdir_path, seed):
+    _run_lifecycle(spark, tmpdir_path, seed)
+
+
+def test_lifecycle_fuzz_with_arrow_table_merges(spark, tmpdir_path):
+    """One seed again with every merge fed a ``pyarrow.Table``: the
+    driver-side dedupe and Arrow writer under the same interleavings."""
+    _run_lifecycle(spark, tmpdir_path, 92, arrow_merges=True)
+
+
+def _run_lifecycle(spark, tmpdir_path, seed, arrow_merges=False):
     rng = random.Random(seed)
     # manifest_inline_files=6 forces GROUPED manifests almost immediately —
     # the 100-TB configuration — so group carry/rewrite logic is exercised
@@ -96,6 +107,17 @@ def test_lifecycle_fuzz_matches_model(spark, tmpdir_path, seed):
         # rows carry per-row epoch provenance like real pipeline tables —
         # it is what makes the change feed exact (co-located rows rewritten
         # into merged files are excluded by the epoch-range filter)
+        if arrow_merges:
+            cols = ["repo", "path", "commit", "content"]
+            tbl = pa.table(
+                {c: pa.array([r[i] for r in rows], pa.string())
+                 for i, c in enumerate(cols)}
+            ).append_column("epoch", pa.array([ep] * len(rows), pa.int32()))
+            if widened:
+                tbl = tbl.append_column(
+                    "lang", pa.array(["l%s" % r[1] for r in rows])
+                )
+            return tbl
         if widened:
             # additive schema evolution mid-sequence: the extra column must
             # survive every later rewrite (compact/rebucket/rollback) and

@@ -142,6 +142,28 @@ def test_resync_heals_same_order_fix(spark, tmpdir_path):
     assert [r.content for r in mir.dst.read().collect()] == ["fixed"]
 
 
+def test_rollback_seen_after_its_marker_expired(spark, tmpdir_path):
+    """A rollback whose ``rollback_of`` snapshot expired before the next
+    poll, followed by a re-replay of the same epochs with a same-order
+    fix: the applied set did not shrink and no marker is left to scan,
+    but the manifests' rollback count still forces the full resync."""
+    src = _tbl(spark, f"{tmpdir_path}/src")
+    src.merge_epoch(_df(spark, [("r", "a", "c000000000001", "base")]), 0)
+    src.merge_epoch(_df(spark, [("r", "a", "c000000000002", "bad")]), 1)
+    mir = Mirror(spark, src, f"{tmpdir_path}/dst")
+    mir.sync()
+    synced = src.current_version()
+    src.tag("synced", synced)  # keeps the mirror's watermark readable
+    marker = src.rollback(1)["version"]
+    src.merge_epoch(_df(spark, [("r", "a", "c000000000002", "fixed")]), 1)
+    src.expire_snapshots(retain_last=1)
+    assert marker not in src.versions() and synced in src.versions()
+    assert src.applied_epochs() == {0, 1}
+    out = mir.sync()
+    assert out["full_resync"] == "rollback_in_window"
+    assert [r.content for r in mir.dst.read().collect()] == ["fixed"]
+
+
 def test_randomized_mirror_differential(spark, tmpdir_path):
     """Random source op sequences (merge/delete/compact/rollback), syncing
     at random points: the mirror must equal the source after every sync."""

@@ -6,10 +6,10 @@ A sparse MOR commit (at most ``key_probe_limit`` staged rows, at most
 Spark job; lowering ``key_probe_limit`` on a handle forces the Spark filter.
 The same commits replayed through both must leave identical snapshots
 (every version, tombstones included), ``stale_rows_dropped`` and
-``delta_files``. A partial verdict (some rows stale, some fresh) still
-writes its filtered copy with Spark; all-fresh and all-stale commits must
-not touch the Spark filter at all, and a sparse commit's ``merge_epochs``
-launches only its staging write's jobs.
+``delta_files``. No sparse commit touches the Spark filter: a partial
+verdict (some rows stale, some fresh) writes its filtered copy with the
+Arrow writer, and a sparse commit's ``merge_epochs`` launches only its
+staging write's jobs.
 """
 
 from __future__ import annotations
@@ -120,9 +120,10 @@ def test_arrow_stale_filter_equals_spark_on_nulls_chain_and_tombstones(
     assert [v[:2] for v in verdicts[1:]] == [
         (0, 1), (4, 0), (1, 1), (1, 1), (1, 1),
     ]
-    # the Arrow side leaves all-fresh and all-stale commits to no Spark
-    # filter and hands only the partial ones on to write their copy
-    assert [v[2] for v in verdicts[1:]] == [0, 0, 1, 1, 1]
+    # the Arrow side never runs the Spark filter: all-fresh and all-stale
+    # commits write nothing, and the partial ones write their filtered
+    # copy with the Arrow writer
+    assert [v[2] for v in verdicts[1:]] == [0, 0, 0, 0, 0]
 
 
 def test_arrow_stale_filter_equals_spark_across_order_widening(
