@@ -18,6 +18,9 @@ import datetime
 import struct
 from numbers import Integral
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import types as T
 
 _P1 = 0x9E3779B185EBCA87
@@ -161,18 +164,10 @@ def bucket_of(values, types, n_buckets: int) -> int:
 
 # ---- vectorized: one bucket per row of Arrow columns -------------------------
 
-def _np_consts():
-    import numpy as np
-
-    return [np.uint64(c) for c in (_P1, _P2, _P3, _P4, _P5)]
-
-
 def _xxh64_rows(data, seeds):
     """XXH64 of each row of ``data`` (a 2-D uint8 array: every row the same
     length) under its own seed: :func:`xxh64` over numpy uint64 lanes."""
-    import numpy as np
-
-    p1, p2, p3, p4, p5 = _np_consts()
+    p1, p2, p3, p4, p5 = (np.uint64(c) for c in (_P1, _P2, _P3, _P4, _P5))
 
     def rotl(x, r):
         return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
@@ -234,10 +229,6 @@ def bucket_rows(columns, types, n_buckets: int):
     ``columns`` (arrays or chunked arrays of equal length), as an int32
     numpy array — the bucket Spark's writer gives each row. Nulls are
     skipped; a row whose placement values are all null hashes the seed."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     n = len(columns[0]) if columns else 0
     h = np.full(n, SEED, dtype=np.uint64)
     for col, dtype in zip(columns, types):

@@ -18,8 +18,9 @@ Hot-path discipline (measured, 8M events; the Arrow tier on a 4-core box):
   (``cleaning.clean_events_arrow``) and a sort-based latest-per-key run in
   memory, sha256 comes from hashlib, and ``merge_epochs`` stages the
   winners with the Arrow writer. At that size Spark's fixed cost per job
-  is most of the work: a 300-event commit took 0.58 s p50 with Spark and
-  its Spark half ~20 ms in Arrow. Larger batches run on Spark as below.
+  is most of the work: on perfbench's ``sparse_upsert`` (300-event
+  commits, 4 cores) the median commit fell from 0.89 s to 0.16 s. Larger
+  batches run on Spark as below.
   Both tiers take the output schema from the Spark plan, so the table
   cannot tell which tier wrote it.
 - **One materialization per batch.** The merge write is the only action that

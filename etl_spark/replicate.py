@@ -91,12 +91,23 @@ class Mirror:
         m_to = self.src.manifest(v_to)
         if _all_applied_epochs(m_from) - _all_applied_epochs(m_to):
             return "applied_set_shrank"  # rolled back, not (fully) re-applied
-        if m_to.get("rollbacks", 0) != m_from.get("rollbacks", 0):
-            # a rollback + re-replay can re-apply the SAME epoch ids with
-            # DIFFERENT rows (the fix-and-replay pattern); the feed's epoch
-            # filter would hide the fix. The count sees the rollback even
-            # when its rollback_of snapshot expired before this poll.
-            return "rollback_in_window"
+        # a rollback + re-replay can re-apply the SAME epoch ids with
+        # DIFFERENT rows (the fix-and-replay pattern); the feed's epoch
+        # filter would hide the fix. The rollback count sees it even when
+        # the rollback_of snapshot expired before this poll.
+        if "rollbacks" in m_from:
+            if m_to.get("rollbacks", 0) != m_from["rollbacks"]:
+                return "rollback_in_window"
+            return None
+        # the last synced snapshot predates the count: a rollback in the
+        # window shows only as a retained rollback_of marker
+        for v in range(v_from + 1, v_to + 1):
+            try:
+                s = (self.src.manifest(v) or {}).get("summary") or {}
+            except FileNotFoundError:
+                continue  # expired intermediate: endpoint checks only
+            if "rollback_of" in s:
+                return "rollback_in_window"
         return None
 
     def _full_resync(self, v_to: int, epoch_ids: list[int],

@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import pyarrow as pa
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from etl_spark.cleaning import (
@@ -30,14 +30,11 @@ _commit = st.one_of(
     st.sampled_from(["c12", "C000000000001", " c000000000001", ""]),
     st.text(max_size=14),
 )
-_lang = st.one_of(
-    st.none(),
-    st.sampled_from([
-        "py", " Py ", "\tpy", "PYTHON\t", "  c++", "MAR\u212aDOWN",
-        "JAVASCR\u0130PT", "go\n", "", " ", "Rust", "\u00a0rs", "txt",
-    ]),
-    st.text(max_size=6),
-)
+_LANGS = [
+    "py", " Py ", "\tpy", "PYTHON\t", "  c++", "MAR\u212aDOWN",
+    "JAVASCR\u0130PT", "go\n", "", " ", "Rust", "\u00a0rs", "txt", None,
+]
+_lang = st.one_of(st.sampled_from(_LANGS), st.text(max_size=6))
 _content = st.one_of(st.none(), st.text(max_size=4))
 _op = st.one_of(st.none(), st.sampled_from(["u", "d", "x", "", "U"]))
 _event = st.tuples(_key, _key, _commit, _lang, _content, _op)
@@ -56,6 +53,15 @@ def _rows(records):
 @settings(max_examples=25, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(events=st.lists(_event, max_size=16), with_op=st.booleans())
+@example(  # every listed lang, LSN and op in one batch, always generated
+    events=[("r", f"l{i}", _LSNS[0], lang, "x", "u")
+            for i, lang in enumerate(_LANGS)]
+    + [("r", f"c{i}", c + end, "py", "x", None)
+       for i, c in enumerate(_LSNS) for end in ("", "\n", "\r\n")]
+    + [("r", f"o{i}", _LSNS[1], "py", None, op)
+       for i, op in enumerate([None, "u", "d", "x", "", "U"])],
+    with_op=True,
+)
 def test_spark_and_arrow_renderings_agree(spark, events, with_op):
     cols = _COLS if with_op else _COLS[:-1]
     rows = [e if with_op else e[:-1] for e in events]
