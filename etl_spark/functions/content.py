@@ -29,17 +29,21 @@ def content_sha256(col) -> Column:
     return F.sha2(F.col(col) if isinstance(col, str) else col, 256)
 
 
+def sha256_hex(s: str | None) -> str | None:
+    """Hex sha256 of one string's UTF-8 bytes (None for None): the value
+    `sha2(col, 256)` gives, for paths that hash on the driver."""
+    return None if s is None else hashlib.sha256(s.encode("utf-8")).hexdigest()
+
+
 @F.pandas_udf(T.StringType())
 def content_sha256_pandas(content: pd.Series) -> pd.Series:
     """Arrow-batched pandas sha256 (hashlib) — differential check vs `sha2`.
 
     Kept to prove the vectorized-pandas/Arrow-UDF path mandated by the input
-    hint; the pipeline itself uses the strictly-faster JVM `sha2`. Tests assert
-    bit-equality between the two.
+    hint; the Spark ingest tier uses the strictly-faster JVM `sha2`. Tests
+    assert bit-equality between the two.
     """
-    return content.map(
-        lambda s: hashlib.sha256(s.encode("utf-8")).hexdigest() if s is not None else None
-    )
+    return content.map(sha256_hex)
 
 
 # --- lang normalization -------------------------------------------------------

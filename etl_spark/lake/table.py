@@ -2661,10 +2661,11 @@ class SnapshotTable:
 
         ``updates`` is a DataFrame or a ``pyarrow.Table``. A table is
         deduped and staged on the driver by the Arrow writer
-        (:func:`arrow_exec.stage`, no Spark job) when its column types
-        allow (:func:`arrow_exec.writable`), and wrapped as a DataFrame
-        otherwise; the commit after staging is the same either way. The
-        pipeline's Arrow ingest tier commits through this path.
+        (:func:`arrow_exec.stage`, no Spark job); its column types must
+        be ones that writer emits (:func:`arrow_exec.writable`), else
+        ``TypeError`` — pass such rows as a DataFrame. The commit after
+        staging is the same either way. The pipeline's Arrow ingest tier
+        commits through this path.
 
         ``stage_as``: write-audit-publish. The merge runs in full — data
         files land in data/, the manifest is built — but instead of
@@ -2709,8 +2710,11 @@ class SnapshotTable:
             if not arrow_exec.writable(
                 from_arrow_schema(updates.schema), self.placement_cols
             ):
-                updates = self.spark.createDataFrame(updates)
-            elif not assume_deduped:
+                raise TypeError(
+                    "the Arrow writer cannot stage a table of schema "
+                    f"{updates.schema}; pass a DataFrame instead"
+                )
+            if not assume_deduped:
                 updates = arrow_exec.latest_per_key(
                     updates, self.key_cols, self.order_col
                 )

@@ -19,8 +19,9 @@ Hot-path discipline (measured, 8M events; the Arrow tier on a 4-core box):
   memory, sha256 comes from hashlib, and ``merge_epochs`` stages the
   winners with the Arrow writer. At that size Spark's fixed cost per job
   is most of the work: on perfbench's ``sparse_upsert`` (300-event
-  commits, 4 cores) the median commit fell from 0.89 s to 0.16 s. Larger
-  batches run on Spark as below.
+  commits, 4 cores) the median commit fell from 0.89 s to 0.16 s, and a
+  7.6 MiB batch still commits 7-15% faster than on Spark. Larger batches
+  run on Spark as below.
   Both tiers take the output schema from the Spark plan, so the table
   cannot tell which tier wrote it.
 - **One materialization per batch.** The merge write is the only action that
@@ -43,8 +44,6 @@ from dataclasses import dataclass, field
 from pathlib import Path
 from typing import Any
 
-import hashlib
-
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -59,7 +58,7 @@ from etl_spark.cleaning import (  # noqa: F401 (COMMIT_RE: public here)
     clean_events,
     clean_events_arrow,
 )
-from etl_spark.functions.content import content_sha256
+from etl_spark.functions.content import content_sha256, sha256_hex
 from etl_spark.lake import arrow_exec
 from etl_spark.lake.table import SnapshotTable
 from etl_spark.metrics import MetricsSink
@@ -75,7 +74,9 @@ from etl_spark.sources.segments import Segment, pending_segments
 # nothing: the floor of _read_segments' split size, and the size under
 # which _apply_batch runs the batch's Spark half on the driver (the Arrow
 # ingest tier) — at that size Spark's fixed per-job cost is most of the
-# work.
+# work. Timed on 4 cores, the Arrow tier is faster up to ~15 MiB and ties
+# Spark near 30 MiB; only the Spark tier gains from more cores, so the
+# cut sits below the crossover.
 SCAN_SPLIT_FLOOR = 8 << 20
 
 
@@ -94,9 +95,7 @@ def derive_content_arrow(tbl: pa.Table) -> pa.Table:
     """:func:`derive_content_columns` on the driver: hashlib sha256 and
     the UTF-8 byte length of ``content``, appended in the same order."""
     sha = pa.array(
-        [None if v is None else hashlib.sha256(v.encode("utf-8")).hexdigest()
-         for v in tbl.column("content").to_pylist()],
-        pa.string(),
+        [sha256_hex(v) for v in tbl.column("content").to_pylist()], pa.string()
     )
     return tbl.append_column("content_sha256", sha).append_column(
         "content_bytes", pc.binary_length(tbl.column("content")).cast(pa.int64())
@@ -258,7 +257,9 @@ class IngestPipeline:
 
     # ---- shared batch core ---------------------------------------------------
 
-    def _read_segments(self, segments: list[Segment]) -> DataFrame:
+    def _read_segments(
+        self, segments: list[Segment], total: int
+    ) -> DataFrame:
         """Read segment dirs with basePath so the ``epoch`` partition column
         survives — it flows through dedupe into per-epoch lineage and into the
         table as row-level provenance. mergeSchema: a catch-up batch may span
@@ -270,14 +271,11 @@ class IngestPipeline:
         maxPartitionBytes gives a medium catch-up batch (say 1.2 GB) only ~10
         scan tasks — on 8+ cores that is two ragged waves and the map stage
         runs half-idle, which measurably caps N->4N scaling. Segment bytes
-        are already known from the driver-side listing (O(#segment files),
-        the pending delta only — never the table), so the split size is set
-        to keep at least ~4 waves-worth of tasks per core, floored at 8 MB
-        so tiny batches don't fragment into per-row tasks."""
-        total = _segment_bytes(segments)
-        # remembered so dedupe_plan / merge can right-size their staging
-        # exchange the same way the scan splits are right-sized below
-        self._batch_bytes = total
+        are already known from the driver-side listing (``total``, from
+        :func:`_segment_bytes`: O(#segment files), the pending delta only —
+        never the table), so the split size is set to keep at least ~4
+        waves-worth of tasks per core, floored at 8 MB so tiny batches
+        don't fragment into per-row tasks."""
         par = max(1, self.spark.sparkContext.defaultParallelism)
         # floor 8 MB: a mid-size batch on a wide cluster is floor-bound
         # (measured: ~1.5 GB catch-up at 32 cores under the old 16 MB floor
@@ -317,9 +315,9 @@ class IngestPipeline:
 
     def _read_arrow(
         self, segments: list[Segment]
-    ) -> tuple[pa.Table, int, str] | None:
+    ) -> tuple[pa.Table, int] | None:
         """The batch's winners as Spark would stage them, computed on the
-        driver: ``(winners, events read, dedupe strategy)``, or None when
+        driver: ``(winners, events read)``, or None when
         the segments hold a type the Arrow tier does not render (the Spark
         tier then runs). Segment files are read with pyarrow and their
         schemas unified additively, as ``mergeSchema`` does; ``epoch``
@@ -355,18 +353,20 @@ class IngestPipeline:
             )
             for e, t in parts
         ])
-        strategy = (
+        # the Spark plan's output schema under the configured strategy
+        # (``auto`` picks by data, so ask ``fused``): the rows are deduped
+        # by arrow_exec.latest_per_key either way
+        out = self._arrow_out_schema(
+            in_schema,
             "fused" if self._dedupe_strategy == "auto"
-            else self._dedupe_strategy
+            else self._dedupe_strategy,
         )
-        out = self._arrow_out_schema(in_schema, strategy)
         winners = derive_content_arrow(arrow_exec.latest_per_key(
             clean_events_arrow(raw), self.table.key_cols, self.table.order_col
         ))
         return (
             arrow_exec.align(winners.select(out.names), to_arrow_schema(out)),
             raw.num_rows,
-            strategy,
         )
 
     def _apply_batch(
@@ -384,6 +384,8 @@ class IngestPipeline:
         t0 = time.time()
         stats = EpochStats(epoch=segments[-1].epoch)
         epochs = [s.epoch for s in segments]
+        # remembered so dedupe_plan / merge can right-size their staging
+        # exchange the same way _read_segments right-sizes the scan splits
         self._batch_bytes = _segment_bytes(segments)
         arrow = (
             self._read_arrow(segments)
@@ -391,15 +393,15 @@ class IngestPipeline:
         )
         raw = None
         if arrow is not None:
-            winners, events_read, strategy = arrow
+            winners, events_read = arrow
             commit = self.table.merge_epochs(
                 winners, epochs,
                 extra_summary={"segments": len(segments), "mode": mode,
-                               "dedupe": strategy, "tier": "arrow"},
+                               "dedupe": "arrow", "tier": "arrow"},
                 assume_deduped=True, stage_as=stage_as,
             )
         else:
-            raw = self._read_segments(segments)
+            raw = self._read_segments(segments, self._batch_bytes)
             try:
                 strategy, winners = self.dedupe_plan(clean_events(raw))
                 # content derivations AFTER dedupe: sha cost scales with
@@ -410,7 +412,7 @@ class IngestPipeline:
                     extra_summary={"segments": len(segments), "mode": mode,
                                    "dedupe": strategy, "tier": "spark"},
                     assume_deduped=True,  # one row per key by the plan
-                    size_hint=getattr(self, "_batch_bytes", None),
+                    size_hint=self._batch_bytes,
                     stage_as=stage_as,
                 )
             finally:

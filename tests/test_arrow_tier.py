@@ -125,6 +125,19 @@ def test_bucket_rows_equals_spark_pmod_xxhash64(spark):
         assert got.tolist() == want, cols
 
 
+def test_merge_epochs_rejects_a_table_the_writer_cannot_stage(
+    spark, tmpdir_path
+):
+    t = SnapshotTable(spark, tmpdir_path, n_buckets=4)
+    tbl = pa.table({
+        "repo": ["r"], "path": ["p"], "commit": ["c000000000001"],
+        "ts": pa.array([dt.datetime(2024, 1, 1)], pa.timestamp("us", "UTC")),
+    })
+    with pytest.raises(TypeError, match="pass a DataFrame"):
+        t.merge_epochs(tbl, [0])
+    assert t.current_version() is None
+
+
 # ---- the forced-tier differential ----------------------------------------------
 
 @pytest.fixture(scope="module")
@@ -215,6 +228,11 @@ def test_forced_tier_differential_incremental_and_catchup(
         summaries = [pipe.table.manifest(v)["summary"]
                      for v in pipe.table.versions()]
         assert {s.get("tier") for s in summaries} == {name}
+        # the plan that deduped the rows: the Arrow tier's own, or the
+        # configured Spark strategy
+        assert {s.get("dedupe") for s in summaries} == (
+            {"arrow"} if name == "arrow" else {"fused"}
+        )
         got[name] = (_snapshot(pipe), _counts(stats))
     assert got["arrow"] == got["spark"]
     snap = got["arrow"][0]

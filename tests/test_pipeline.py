@@ -157,14 +157,15 @@ def test_events_read_from_footers_equals_raw_count(replayed, stream):
     stream with re-deliveries and an additive column from epoch 2, one
     segment at a time and as one catch-up batch spanning the column's
     appearance."""
-    from etl_spark.pipeline import _footer_rows
+    from etl_spark.pipeline import _footer_rows, _segment_bytes
 
     pipe, stats = replayed
     segs = discover_segments(stream)
     assert [s.events_read for s in stats] == [
-        pipe._read_segments([seg]).count() for seg in segs
+        pipe._read_segments([seg], _segment_bytes([seg])).count()
+        for seg in segs
     ]
-    raw = pipe._read_segments(segs)
+    raw = pipe._read_segments(segs, _segment_bytes(segs))
     try:
         assert "metadata" in raw.columns
         assert _footer_rows(raw) == raw.count() > N_EVENTS
